@@ -26,13 +26,18 @@ dask layout the reference relies on, re-expressed for Spark:
   into Arrow batches (``mapInPandas``). No data moves through the
   driver; tasks scale with the chunk count; codecs are stdlib (or
   numcodecs when present — see zarr_store.py).
-- **write**: rows get dense dim indices (broadcast joins against the
-  collected coords — coordinate axes are metadata-sized), are grouped
-  by the chunk-grid cell they land in, and each group writes its OWN
-  chunk files (group ↔ chunk bijection: no write conflicts, no
-  driver funnel). Variables over a dim subset (e.g. per-(time,
-  baseline) scalars) are reduced first and written on their own
-  chunk grid. The driver writes only metadata + 1-D coords, then
+- **write**: one aggregate collects every dim's sorted coordinates
+  (metadata-sized; timestamps as ``unix_micros`` longs, so no value
+  passes through a local-time datetime). Rows are grouped by the
+  chunk-grid cell they land in — a dim held in one chunk has chunk key
+  0, only a chunked dim joins a small (key → chunk) table — and each
+  group finds its rows' dense indices in the coordinates inside the
+  write task, then writes its OWN chunk files (group ↔ chunk
+  bijection: no write conflicts, no driver funnel). The input is
+  evaluated once for the coordinates and once per write job.
+  Variables over a dim subset (e.g. per-(time, baseline) scalars) are
+  reduced first and written by their own job on their own chunk grid.
+  The driver writes only metadata + 1-D coords, then
   consolidates. Store paths may live on a shared filesystem (local
   mode, NFS) or an object store: URL-scheme paths ("s3://bucket/...")
   dispatch through zarr_store's filesystem layer (fsspec/s3fs when
@@ -72,24 +77,27 @@ class VarSpec:
     fill: Any = None
 
 
-def _np_coord(values: list, spark_type: T.DataType) -> np.ndarray:
+def _keyed(df: DataFrame, dims) -> DataFrame:
+    """``df`` with every timestamp dim replaced by its ``unix_micros``
+    long: dims are collected, matched and chunk-joined on these keys,
+    so no value passes through a local-time Python datetime."""
+    ts = {f.name: F.unix_micros(f.name) for f in df.schema.fields
+          if f.name in dims and isinstance(f.dataType, T.TimestampType)}
+    return df.withColumns(ts)
+
+
+def _coord_keys(coord: np.ndarray) -> np.ndarray:
+    """Stored coordinate array → the keys :func:`_keyed` rows carry."""
+    if coord.dtype.kind == "M":
+        return coord.astype("datetime64[us]").astype(np.int64)
+    return coord
+
+
+def _stored_coord(keys: np.ndarray, spark_type: T.DataType) -> np.ndarray:
+    """Inverse of :func:`_coord_keys` for a dim column of ``spark_type``."""
     if isinstance(spark_type, T.TimestampType):
-        return np.asarray(values, dtype="datetime64[us]").astype(
-            "datetime64[ns]")
-    return np.asarray(values)
-
-
-def _coord_to_pylist(arr: np.ndarray) -> tuple[list, T.DataType]:
-    """numpy coord → (python values, spark type) for the index join."""
-    if arr.dtype.kind == "M":
-        py = [t.to_pydatetime()
-              for t in pd.to_datetime(arr.astype("datetime64[us]"))]
-        return py, T.TimestampType()
-    if arr.dtype.kind in "iu":
-        return [int(x) for x in arr], T.LongType()
-    if arr.dtype.kind == "f":
-        return [float(x) for x in arr], T.DoubleType()
-    return list(arr), T.StringType()
+        return keys.astype("datetime64[us]").astype("datetime64[ns]")
+    return keys
 
 
 # --------------------------------------------------------------------------
@@ -113,20 +121,26 @@ def write_zarr_xds(
     Returns {'shape': ..., 'chunks': ..., 'rows': n}. See module
     docstring for the distributed shape.
     """
-    spark = df.sparkSession
     chunks = dict(chunks or {})
     fs = zs.filesystem_for(store)
     gpath = os.path.join(store, group)
 
-    # ---- coords: sorted distincts per dim (metadata-sized collect)
-    coords: dict[str, np.ndarray] = {}
-    types: dict[str, T.DataType] = {}
-    for d in dim_cols:
-        typ = df.schema[d].dataType
-        vals = [r[0] for r in df.select(d).distinct().orderBy(d).collect()]
-        coords[d] = _np_coord(vals, typ)
-        types[d] = typ
-    shape = {d: len(coords[d]) for d in dim_cols}
+    # ---- coords: every dim's sorted keys in ONE aggregate
+    # (metadata-sized collect)
+    keyed = _keyed(df, dim_cols)
+    got = keyed.agg(
+        *[F.array_sort(F.collect_set(d)).alias(d) for d in dim_cols],
+        *[F.count_if(F.col(d).isNull()).alias(f"__{d}_nulls")
+          for d in dim_cols]).collect()[0]
+    nulls = [d for d in dim_cols if got[f"__{d}_nulls"]]
+    if nulls:
+        raise ValueError(
+            f"write_zarr_xds: dims {nulls} hold null values — every row "
+            "needs a coordinate on every dim")
+    keys = {d: np.asarray(got[d]) for d in dim_cols}
+    coords = {d: _stored_coord(keys[d], df.schema[d].dataType)
+              for d in dim_cols}
+    shape = {d: len(keys[d]) for d in dim_cols}
     empty = [d for d in dim_cols if shape[d] == 0]
     if empty:
         raise ValueError(
@@ -155,56 +169,86 @@ def write_zarr_xds(
             v.dtype, compressor=compressor, fill_value=v.fill,
             attrs={DIM_ATTR: list(v.dims)}, fs=fs)
 
-    # ---- dense dim indices via broadcast joins on the coord tables
-    idx = df
-    for d in dim_cols:
-        py, styp = _coord_to_pylist(coords[d])
-        lookup = spark.createDataFrame(
-            [(v, i) for i, v in enumerate(py)],
-            T.StructType([T.StructField(d, styp),
-                          T.StructField(f"__{d}_idx", T.IntegerType())]))
-        idx = idx.join(F.broadcast(lookup), d)
+    rows = _write_vars(
+        keyed, arrays, var_specs, tuple(dim_cols), keys, chunk_of,
+        miss="write rows carry {d} values missing from the coordinates "
+             "collected from the same input — the input must be "
+             "deterministic")
+    if consolidate:
+        zs.consolidate_metadata(store, fs=fs)
+    return {"shape": shape, "chunks": chunk_of,
+            "rows": rows.get(tuple(dim_cols), 0)}
 
-    # ---- one write job per distinct dim subset (full-dim vars first)
-    n_rows = 0
+
+def _write_vars(keyed: DataFrame, arrays: dict[str, zs.ZarrArray],
+                var_specs: list[VarSpec], all_dims: tuple[str, ...],
+                keys: dict[str, np.ndarray], chunk_of: dict[str, int],
+                miss: str) -> dict[tuple[str, ...], int]:
+    """One write job per distinct dim subset of ``var_specs`` (full-dim
+    vars first) over ``keyed`` rows (see :func:`_keyed`); returns the
+    rows written per subset."""
+    rows = {}
     for dims in sorted({v.dims for v in var_specs},
                        key=lambda t: (-len(t), t)):
         specs = [v for v in var_specs if v.dims == dims]
-        sub = idx
-        if dims != tuple(dim_cols):
+        sub = keyed
+        if dims != all_dims:
             # reduce to one row per subset cell (values are constant
             # across the dropped dims; first() per cell)
-            keys = [f"__{d}_idx" for d in dims]
             cols = [c for v in specs for c in v.cols]
-            sub = idx.groupBy(*keys).agg(
+            sub = keyed.groupBy(*dims).agg(
                 *[F.first(c, ignorenulls=True).alias(c) for c in cols])
-        n = _write_var_chunks(sub, [arrays[v.name] for v in specs],
-                              specs, dims, chunk_of)
-        if dims == tuple(dim_cols):
-            n_rows = n
-    if consolidate:
-        zs.consolidate_metadata(store, fs=fs)
-    return {"shape": shape, "chunks": chunk_of, "rows": n_rows}
+        rows[dims] = _write_var_chunks(
+            sub, [arrays[v.name] for v in specs], specs, dims, keys,
+            chunk_of, miss)
+    return rows
 
 
 def _write_var_chunks(sub: DataFrame, arrays: list[zs.ZarrArray],
                       specs: list[VarSpec], dims: tuple[str, ...],
-                      chunk_of: dict[str, int]) -> int:
-    """Group rows by chunk-grid cell; each group scatters its rows into
-    dense per-variable slabs and writes exactly its own chunk files."""
-    keys = [f"__{d}_idx" for d in dims]
-    ck = [(F.col(k) / F.lit(chunk_of[d])).cast("int").alias(f"__ck_{d}")
-          for k, d in zip(keys, dims)]
-    need = keys + [c for v in specs for c in v.cols]
-    g = sub.select(*need, *ck)
+                      keys: dict[str, np.ndarray],
+                      chunk_of: dict[str, int], miss: str) -> int:
+    """Group rows by chunk-grid cell; each group finds its rows' dense
+    dim indices in ``keys`` (each dim's coordinate keys, in store
+    order), scatters its rows into dense per-variable slabs and writes
+    exactly its own chunk files.
+
+    A dim held in one chunk has chunk key 0. A chunked dim gets its
+    chunk key from a LEFT broadcast join against a (key → chunk) table,
+    so a key outside ``keys`` still reaches a task — in the null-key
+    group — and raises ``miss`` (formatted with ``d``) there, as it does
+    on any dim."""
+    spark = sub.sparkSession
+    g = sub.select(*dims, *[c for v in specs for c in v.cols])
+    for d in dims:
+        ck = f"__ck_{d}"
+        if chunk_of[d] >= len(keys[d]):
+            g = g.withColumn(ck, F.lit(0))
+            continue
+        lookup = spark.createDataFrame(
+            [(k, i // chunk_of[d]) for i, k in enumerate(keys[d].tolist())],
+            T.StructType([T.StructField(d, g.schema[d].dataType),
+                          T.StructField(ck, T.IntegerType())]))
+        g = g.join(F.broadcast(lookup), d, "left")
 
     chunk_shape = tuple(chunk_of[d] for d in dims)
+    order = {d: np.argsort(keys[d], kind="stable") for d in dims}
+    srt = {d: keys[d][order[d]] for d in dims}
     schema = T.StructType([T.StructField("rows", T.LongType())])
 
+    def dense_index(d: str, vals: np.ndarray) -> np.ndarray:
+        pos = np.minimum(np.searchsorted(srt[d], vals), len(srt[d]) - 1)
+        hit = srt[d][pos] == vals
+        if not hit.all():
+            raise ValueError(miss.format(d=d) + ": "
+                             + repr(vals[~hit][:5].tolist()))
+        return order[d][pos]
+
     def write_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        # indices first: a missed key arrives with a null chunk key
+        pos = [dense_index(d, pdf[d].to_numpy()) for d in dims]
         cid = tuple(int(k) for k in key)
-        local = [pdf[k].to_numpy(np.int64) - c * n
-                 for k, c, n in zip(keys, cid, chunk_shape)]
+        local = [p - c * n for p, c, n in zip(pos, cid, chunk_shape)]
         flat = np.ravel_multi_index(local, chunk_shape)
         for arr, v in zip(arrays, specs):
             fill = v.fill
@@ -220,9 +264,10 @@ def _write_var_chunks(sub: DataFrame, arrays: list[zs.ZarrArray],
             arr.write_chunk(cid, slab)
         return pd.DataFrame({"rows": [len(pdf)]})
 
+    # one row per chunk: the sum is metadata-sized, so it runs here
     counts = g.groupBy(*[f"__ck_{d}" for d in dims]) \
-        .applyInPandas(write_group, schema).agg(F.sum("rows")).collect()
-    return int(counts[0][0] or 0)
+        .applyInPandas(write_group, schema).collect()
+    return sum(r.rows for r in counts)
 
 
 # --------------------------------------------------------------------------
@@ -584,14 +629,13 @@ def append_zarr_vars(
     zarr.create + da.store of just the new arrays).
 
     The group's existing dim coords define the cube: ``df``'s rows are
-    index-joined against them (rows whose dim values are not in the
-    store's coordinates raise — appending cannot grow dims, same as the
-    reference), and the new chunk files are written on the EXISTING
-    chunk grid (anchor chunk sizes per dim) by the same
+    indexed against them inside the write tasks (rows whose dim values
+    are not in the store's coordinates raise — appending cannot grow
+    dims, same as the reference), and the new chunk files are written
+    on the EXISTING chunk grid (anchor chunk sizes per dim) by the same
     group-per-chunk distributed writer. Existing variables of the same
     name raise instead of silently overwriting.
     """
-    spark = df.sparkSession
     fs = zs.filesystem_for(store)
     dims, coords, data, _, anchor = _discover(store, group)
     gpath = os.path.join(store, group)
@@ -603,10 +647,11 @@ def append_zarr_vars(
         if missing:
             raise KeyError(f"{v.name}: dims {missing} not in group "
                            f"dims {dims}")
-    coord_vals = {d: (coords[d].read_full() if d in coords else None)
-                  for d in dims}
     shape = {d: anchor.shape[dims.index(d)] for d in dims}
     chunk_of = {d: anchor.chunks[dims.index(d)] for d in dims}
+    # a dim without a coordinate array is indexed by its own values
+    keys = {d: (_coord_keys(coords[d].read_full()) if d in coords
+                else np.arange(shape[d])) for d in dims}
 
     arrays: dict[str, zs.ZarrArray] = {}
     for v in var_specs:
@@ -617,45 +662,13 @@ def append_zarr_vars(
             v.dtype, compressor=compressor, fill_value=v.fill,
             attrs={DIM_ATTR: list(v.dims)}, fs=fs)
 
-    idx = df
-    for d in dims:
-        if coord_vals[d] is not None:
-            py, styp = _coord_to_pylist(coord_vals[d])
-            lookup = spark.createDataFrame(
-                [(val, i) for i, val in enumerate(py)],
-                T.StructType([T.StructField(d, styp),
-                              T.StructField(f"__{d}_idx",
-                                            T.IntegerType())]))
-            # LEFT join + raise on unmatched: a row whose dim value is
-            # not in the store's coordinates means the append would
-            # have to grow a dim (the reference can't either) — the
-            # check rides the write job, costing zero extra passes
-            idx = idx.join(F.broadcast(lookup), d, "left").withColumn(
-                f"__{d}_idx",
-                F.when(F.col(f"__{d}_idx").isNotNull(),
-                       F.col(f"__{d}_idx")).otherwise(F.raise_error(
-                           F.concat(F.lit(
-                               f"append rows carry {d} values outside "
-                               "the store's coordinates — appending "
-                               "cannot grow dims: "),
-                               F.col(d).cast("string")))))
-        else:
-            idx = idx.withColumn(f"__{d}_idx",
-                                 F.col(d).cast("int"))
-    n = 0
-    for vdims in sorted({v.dims for v in var_specs},
-                        key=lambda t: (-len(t), t)):
-        specs = [v for v in var_specs if v.dims == vdims]
-        sub = idx
-        if vdims != dims:
-            keys = [f"__{d}_idx" for d in vdims]
-            cols = [c for v in specs for c in v.cols]
-            sub = idx.groupBy(*keys).agg(
-                *[F.first(c, ignorenulls=True).alias(c) for c in cols])
-        n = max(n, _write_var_chunks(sub, [arrays[v.name] for v in specs],
-                                     specs, vdims, chunk_of))
+    rows = _write_vars(
+        _keyed(df, dims), arrays, var_specs, dims, keys, chunk_of,
+        miss="append rows carry {d} values outside the store's "
+             "coordinates — appending cannot grow dims")
     zs.consolidate_metadata(store, fs=fs)
-    return {"appended": [v.name for v in var_specs], "rows": n}
+    return {"appended": [v.name for v in var_specs],
+            "rows": max(rows.values(), default=0)}
 
 
 def write_vis_zarr_partitions(

@@ -275,15 +275,18 @@ def test_append_zarr_vars(spark, tmp_path):
                     ("model_re", "model_im"), "<c16",
                     complex(np.nan, np.nan))])
     # out-of-coordinate rows refuse (append cannot grow dims) — the
-    # guard rides the write job as a raise_error
+    # guard rides the write job, on an unchunked dim (baseline) and on
+    # a chunked one (time, whose chunk key comes from a join)
     from pyspark.errors import PythonException, SparkRuntimeException
-    bad = model.withColumn("baseline", F.col("baseline") + 100)
-    with pytest.raises((PythonException, SparkRuntimeException),
-                       match="cannot grow"):
-        append_zarr_vars(bad, store, "xds0", var_specs=[
-            VarSpec("X", ("time", "baseline", "chan", "pol"),
-                    ("model_re", "model_im"), "<c16",
-                    complex(np.nan, np.nan))])
+    for bad in (model.withColumn("baseline", F.col("baseline") + 100),
+                model.withColumn("time", F.col("time")
+                                 + F.expr("INTERVAL 1 DAY"))):
+        with pytest.raises((PythonException, SparkRuntimeException),
+                           match="cannot grow"):
+            append_zarr_vars(bad, store, "xds0", var_specs=[
+                VarSpec("X", ("time", "baseline", "chan", "pol"),
+                        ("model_re", "model_im"), "<c16",
+                        complex(np.nan, np.nan))])
 
 
 from hypothesis import given, settings
@@ -339,6 +342,83 @@ def test_write_zarr_empty_input_raises(spark, tmp_path):
     empty = _vis_df(spark).filter("baseline > 99")
     with pytest.raises(ValueError, match="no rows"):
         write_vis_zarr(empty, store, "xds0")
+
+
+def test_write_zarr_null_dim_raises_before_writing(spark, tmp_path):
+    """A null dim value is no coordinate: it raises, naming the dim,
+    before any array file exists (it used to count as an extra chan
+    and leave a store read_vis_zarr could not open)."""
+    store = str(tmp_path / "vis.zarr")
+    src = _vis_df(spark, nc=2).withColumn(
+        "chan", F.when((F.col("baseline") == 0) & (F.col("chan") == 1),
+                       None).otherwise(F.col("chan")))
+    with pytest.raises(ValueError, match="chan"):
+        write_vis_zarr(src, store, "xds0")
+    assert not os.path.exists(store)
+
+
+@pytest.mark.parametrize("time_chunk", [2, 100])
+def test_vis_zarr_time_axis_ignores_local_zone(spark, tmp_path,
+                                               time_chunk):
+    """The stored and read-back time axis is the input's instants under
+    a non-UTC process zone, with time chunked (chunk keys joined) and
+    unchunked (chunk key 0)."""
+    import time as _time
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    _time.tzset()
+    try:
+        store = str(tmp_path / "vis.zarr")
+        src = _vis_df(spark)
+        want = sorted(r[0] for r in src.select(F.unix_micros("time"))
+                      .distinct().collect())
+        info = write_vis_zarr(src, store, "xds0", time_chunk=time_chunk)
+        assert info["rows"] == src.count()
+        stored = zs.ZarrArray.open(os.path.join(store, "xds0", "time"))
+        assert stored.read_full().astype("datetime64[us]").astype(
+            np.int64).tolist() == want
+        back = read_vis_zarr(spark, store, "xds0")
+        key = [F.unix_micros("time").alias("t"), "baseline", "chan", "pol"]
+        a = src.select(*key, "data_re").orderBy("t", "baseline", "chan",
+                                                "pol").collect()
+        b = back.select(*key, "data_re").orderBy("t", "baseline", "chan",
+                                                 "pol").collect()
+        assert a == b
+    finally:
+        if old is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old
+        _time.tzset()
+
+
+def test_write_vis_zarr_runs_two_sql_executions(spark, tmp_path):
+    """Writing one dim group over a filtered, aggregated input runs one
+    coordinate aggregate plus one write — not a distinct per dim, each
+    re-running the input."""
+    src = (_vis_df(spark).filter(~F.col("flag"))
+           .groupBy("time", "baseline", "chan", "pol")
+           .agg(F.avg("data_re").alias("data_re"),
+                F.avg("data_im").alias("data_im")))
+    status = spark._jsparkSession.sharedState().statusStore()
+
+    def newest_execution() -> int:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        n = status.executionsCount()
+        return status.executionsList(n - 1, 1).apply(0).executionId() \
+            if n else -1
+
+    def executions_since(last: int) -> int:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        n = status.executionsCount()
+        tail = status.executionsList(max(n - 16, 0), 16)
+        return sum(tail.apply(i).executionId() > last
+                   for i in range(tail.size()))
+
+    last = newest_execution()
+    info = write_vis_zarr(src, str(tmp_path / "vis.zarr"), "xds0")
+    assert executions_since(last) == 2
+    assert info["rows"] == src.count()
 
 
 def test_read_zarr_permuted_var_dims_raise(spark, tmp_path):
