@@ -12,27 +12,39 @@ literal as ONE ``F.expr`` string is ~300x cheaper at build time
 exponent literal parses directly as DOUBLE via ``Double.parseDouble``
 (correctly rounded — bare decimals would go through a decimal literal
 whose ->double cast is the 1-ulp hazard grid._sql_flit documents for
-DuckDB).
+DuckDB). NaN and ±inf have no SQL literal and go through exact string
+casts; an empty list is cast to its array type.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def _d(x) -> str:
-    return f"{float(x):.17e}"
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x:.17e}"
+    # no SQL literal spells these; the string casts are exact
+    if math.isnan(x):
+        return "double('NaN')"
+    return "double('Infinity')" if x > 0 else "double('-Infinity')"
+
+
+def _arr(items: list[str], sql_type: str) -> str:
+    # a bare array() types as array<void>
+    return f"array({','.join(items)})" if items else f"CAST(array() AS {sql_type})"
 
 
 def flit_arr(vals) -> Column:
     """``array<double>`` literal in ONE py4j call."""
-    return F.expr("array(" + ",".join(_d(x) for x in vals) + ")")
+    return F.expr(_arr([_d(x) for x in vals], "ARRAY<DOUBLE>"))
 
 
 def flit_arr2d(rows) -> Column:
     """``array<array<double>>`` literal in ONE py4j call."""
-    return F.expr(
-        "array(" + ",".join(
-            "array(" + ",".join(_d(x) for x in row) + ")"
-            for row in rows) + ")")
+    return F.expr(_arr([_arr([_d(x) for x in row], "ARRAY<DOUBLE>")
+                        for row in rows], "ARRAY<ARRAY<DOUBLE>>"))

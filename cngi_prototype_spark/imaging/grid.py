@@ -30,11 +30,14 @@ Two physical strategies, same semantics:
 
    With ``dense_planes=True`` (cube-imaging fast path, used by
    ``make_image(output="planes")``): rows group JVM-side into one fat
-   ``collect_list(struct)`` row per (chan, pol, u-slab) — the groupBy
-   is the shuffle — each ``mapInArrow`` task scatters its groups into
-   L2-resident slab arrays, and partials are emitted as WHOLE ARRAYS
-   (one row per plane-slab) — no per-cell row explosion; the FFT
-   consumer places and sums slabs directly. At the CHILES shape
+   ``collect_list(struct)`` row per (chan, pol, u-slab) and input
+   partition — one exchange, hash-partitioned on the slab alone, so a
+   fat row never holds more than one input partition's rows of its
+   slab and no partition count is probed at build — each
+   ``mapInArrow`` task sums its slabs' fat rows into L2-resident slab
+   arrays, and partials are emitted as WHOLE ARRAYS (one row per
+   plane-slab) — no per-cell row explosion; the FFT consumer places
+   and sums slabs directly. At the CHILES shape
    (support 17, 1024² padded grid) this path matches-or-beats the
    reference prototype's per-core gridding throughput (vs_baseline
    0.92-1.08 across bench runs; see bench.py imaging_chiles_frac)
@@ -448,8 +451,9 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
       (~32 B/row in UnsafeRow) instead of 8 (~72 B/row), and the
       group key (chan, pol, u-slab) is a single shift of that key
       because slabs are power-of-2 wide;
-    - the rows cross the Python boundary as ~n_planes·n_slabs FAT rows
-      (``collect_list(struct(k, wr, wi))`` per slab group), not as
+    - the rows cross the Python boundary as ~n_planes·n_slabs·n_inputs
+      FAT rows (``collect_list(struct(k, wr, wi))`` per slab group and
+      input partition), not as
       25M scalar rows: PySpark's row-at-a-time Arrow feed costs ~8 µs
       of JVM CPU per row at this scale (measured: a 25.6M-row
       ``mapInArrow`` passthrough burns every core for ~7 s even from a
@@ -457,8 +461,8 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
       array-cells feed in ~0.3 s), so shipping columnar array cells
       instead of rows removes the single biggest cost in the tier;
     - ``mapInArrow`` hands the struct-list children straight to numpy
-      (zero-copy) and emits the partial slab planes as one Arrow
-      ListArray per partition;
+      (zero-copy), sums a slab's fat rows into one partial plane and
+      emits the partials as one Arrow ListArray per partition;
     - the per-row 1-D kernel factors come from a (256, support) LUT
       indexed by the packed du byte — one fancy-index gather per axis
       replaces per-tap ``cgk[|ov·iu + du|]`` gathers — and the scatter
@@ -490,6 +494,7 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     slab_log = max(0, int(np.ceil(np.log2(max(1, -(-n_u // want_salt))))))
     slab_w = 1 << slab_log
     shift_group = 16 + bv + slab_log  # (chan, pol, u_slab) id
+    slab_mask = (1 << (bu - slab_log)) - 1  # slab_w <= 2^bu, so >= 0
 
     # fail fast on ids the bit layout can't hold: pol has 4 bits, chan
     # the remaining high bits; out-of-range (or negative) ids would
@@ -522,30 +527,30 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     if wn_col is not None:
         sel.append(wn_col.alias("_wn"))
     src = prepared.select(*sel)
-    # one fat row per (chan, pol, u-slab): the groupBy IS the
-    # repartition (same shuffle keys), and collect_list(struct) keeps
-    # k/wr/wi index-aligned through partial-buffer merges.
-    # Scale safety valve: a fat row is unbounded in the few-planes /
-    # many-rows (continuum) regime — a (plane, slab) group over 10^9
-    # rows would collect one multi-GB list. Sub-salt the group key so
-    # each fat row covers at most ~2 input partitions' worth of rows;
-    # the consumer already sums multiple partials per slab, so extra
-    # fat rows only cost their emission. nsub == 1 whenever the plane
-    # count alone gives enough groups (the cube-imaging common case).
+    shipped = src.columns
+    # one fat row per (chan, pol, u-slab) and INPUT PARTITION: the
+    # group id and spark_partition_id() are computed before the one
+    # exchange, which hash-partitions on the group id alone with an
+    # explicit count (so the groupBy reuses it, and AQE cannot coalesce
+    # the gridding stage below p tasks). collect_list(struct) keeps
+    # k/wr/wi index-aligned.
+    # Scale safety valve: a fat row therefore holds at most one input
+    # partition's rows of its slab, for any input and with no partition
+    # count probed at build; every fat row of a group meets in one task,
+    # which sums them into one slab partial before emitting.
     n_groups = max(1, int(n_planes or 1)) * max(1, n_u >> slab_log)
-    npart = src.rdd.getNumPartitions()
-    nsub = max(1, npart // (2 * n_groups))
     # MEMORY budget, not just task fairness (round-8 driver bench OOM):
     # a collect_list element is a 32 B UnsafeRow struct(long, double,
     # double) plus buffer slack — budget ~48 B/row and cap each fat
-    # row's list at ~64 MB, so a group's final aggregation buffer can
-    # never outgrow a task's share of executor memory no matter how
-    # many input rows pile into one (plane, u-slab). The consumer sums
-    # arbitrarily many partial slabs, so extra sub-buckets only cost
-    # their emission.
+    # row's list at ~64 MB when the caller declares its row count, so a
+    # group's aggregation buffer can never outgrow a task's share of
+    # executor memory even when one input partition piles its rows into
+    # one (plane, u-slab). The consumer sums arbitrarily many partial
+    # slabs, so extra sub-buckets only cost their emission.
     cap_rows = (64 << 20) // 48  # ~1.4M rows per fat row
+    nsub = 1
     if rows_hint:
-        nsub = max(nsub, -(-int(rows_hint) // (n_groups * cap_rows)))
+        nsub = max(1, -(-int(rows_hint) // (n_groups * cap_rows)))
     gkey = F.shiftrightunsigned(F.col("_k"), shift_group)
     # Skew insurance (opt-in: one counting pass over the input at plan
     # build — cheap when the caller has the rows persisted, a full
@@ -553,9 +558,9 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     # uv coverage concentrates taps in few (plane, u-slab) groups;
     # each group is one task's serial unit, so the heaviest group sets
     # the stage's wall-clock. Probe the per-group row counts and
-    # sub-salt ONLY groups that exceed a core's fair share: the stage's
-    # wall-clock is ~max(total/npart, max_group), so a group is a
-    # straggler only when its count approaches total/npart — splitting
+    # sub-salt ONLY groups that exceed a task's fair share: the p-task
+    # stage's wall-clock is ~max(total/p, max_group), so a group is a
+    # straggler only when its count approaches total/p — splitting
     # anything smaller (the old 1.5x-mean trigger: round-7's
     # vs_baseline_skew regression) pays the per-row value-hash +
     # broadcast-join toll on EVERY row for zero wall-clock gain; 512
@@ -568,15 +573,14 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         cnts = src.groupBy(gkey.alias("_g")).count().collect()
         if cnts:
             total = sum(r["count"] for r in cnts)
-            fair = max(1.0, total / max(1, npart))
+            fair = max(1.0, total / p)
             for r in cnts:
                 # fairness split (wall-clock: no group past ~half a
-                # core's fair share) is bounded by npart — finer buys
+                # task's fair share) is bounded by p — finer buys
                 # nothing; the BYTE split (no fat row past cap_rows)
-                # is NOT npart-bounded: memory correctness must win
-                # over scheduling granularity.
-                sub_f = (min(npart,
-                             int(np.ceil(r["count"] / (fair / 2.0))))
+                # is NOT p-bounded: memory correctness must win over
+                # scheduling granularity.
+                sub_f = (min(p, int(np.ceil(r["count"] / (fair / 2.0))))
                          if r["count"] > 0.75 * fair else 1)
                 sub_b = -(-int(r["count"]) // cap_rows)
                 sub = max(sub_f, sub_b)
@@ -613,7 +617,10 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     aggs = [F.collect_list(F.struct("_k", "_wr", "_wi")).alias("_rows")]
     if wn_col is not None:
         aggs.append(F.sum("_wn").alias("_wn"))
-    src = src.groupBy(gkey.alias("_g")).agg(*aggs)
+    src = (src.select(*shipped, gkey.alias("_g"),
+                      F.spark_partition_id().alias("_pid"))
+           .repartition(p, "_g")
+           .groupBy("_g", "_pid").agg(*aggs))
 
     # (256, support) LUT over the packed du byte; indices past the
     # half-kernel table are unreachable for valid data — zero them
@@ -647,11 +654,13 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         cw_b = np.empty((chunk, support), np.complex128)
         vz_b = np.empty((chunk, support, support), np.complex128)
         idx_b = np.empty((chunk, support * support), np.int32)
-        out_ch, out_po, out_u0, res, ims = [], [], [], [], []
-        out_wn = []
+        # one slab partial per group: the task holds every fat row of
+        # its groups (one per input partition), summed in place
+        acc: dict[int, np.ndarray] = {}
+        acc_wn: dict[int, float] = {}
         for b in batches:
             for ri in range(b.num_rows):
-                rows = b.column(1)[ri].values    # struct children, zero-copy
+                rows = b.column(2)[ri].values    # struct children, zero-copy
                 kseg = rows.field(0).to_numpy(zero_copy_only=False)
                 wre = rows.field(1).to_numpy(zero_copy_only=False)
                 wim = rows.field(2).to_numpy(zero_copy_only=False)
@@ -670,10 +679,11 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
                 v_c = (kseg >> 16) & ((1 << bv) - 1)
                 u_c = (kseg >> (16 + bv)) & ((1 << bu) - 1)
                 g = int(kseg[0] >> shift_group)
-                sl = g & ((1 << (bu - slab_log)) - 1) if bu > slab_log else 0
-                u0 = sl * slab_w - half
+                u0 = (g & slab_mask) * slab_w - half
                 base = ((u_c - u0) * n_v + v_c).astype(np.int32)
-                fg = np.zeros(m, np.complex128)
+                fg = acc.get(g)
+                if fg is None:
+                    fg = acc[g] = np.zeros(m, np.complex128)
                 cu = lut[duix]          # (n, support)
                 cv = lut[dvix]
                 for c0 in range(0, len(kseg), chunk):
@@ -686,25 +696,24 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
                     idx = np.add(base[c0:c1, None], off[None, :],
                                  out=idx_b[:nc])
                     np.add.at(fg, idx.reshape(-1), vz.reshape(-1))
-                out_ch.append(np.int32((kseg[0] >> (4 + bu + bv + 16))))
-                out_po.append(np.int32((kseg[0] >> (bu + bv + 16)) & 15))
-                out_u0.append(np.int32(u0))
-                res.append(np.ascontiguousarray(fg.real))
-                ims.append(np.ascontiguousarray(fg.imag))
                 if with_wn:
-                    out_wn.append(b.column(2)[ri].as_py() or 0.0)
-        if not res:
+                    acc_wn[g] = acc_wn.get(g, 0.0) + (
+                        b.column(3)[ri].as_py() or 0.0)
+        if not acc:
             return
-        offs = pa.array(np.arange(len(res) + 1, dtype=np.int32) * m)
+        gs = np.fromiter(acc, np.int64, len(acc))
+        offs = pa.array(np.arange(len(acc) + 1, dtype=np.int32) * m)
         arrays = [
-            pa.array(np.asarray(out_ch, np.int32)),
-            pa.array(np.asarray(out_po, np.int32)),
-            pa.array(np.asarray(out_u0, np.int32)),
-            pa.ListArray.from_arrays(offs, pa.array(np.concatenate(res))),
-            pa.ListArray.from_arrays(offs, pa.array(np.concatenate(ims))),
+            pa.array((gs >> (4 + bu - slab_log)).astype(np.int32)),
+            pa.array(((gs >> (bu - slab_log)) & 15).astype(np.int32)),
+            pa.array(((gs & slab_mask) * slab_w - half).astype(np.int32)),
+            pa.ListArray.from_arrays(offs, pa.array(np.concatenate(
+                [fg.real for fg in acc.values()]))),
+            pa.ListArray.from_arrays(offs, pa.array(np.concatenate(
+                [fg.imag for fg in acc.values()]))),
         ]
         if with_wn:
-            arrays.append(pa.array(np.asarray(out_wn, np.float64)))
+            arrays.append(pa.array([acc_wn[g] for g in acc], pa.float64()))
         yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     import pyspark.sql.types as T

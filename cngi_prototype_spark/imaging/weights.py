@@ -15,17 +15,21 @@ Reference parity: ``make_imaging_weight``
    cell and divides: ``iw = w / (f1·g + f2)`` (weight left unchanged when
    the sample or cell is empty/NaN).
 
-Spark-first shape: step 1 is a two-arm projection union + groupBy sum
-(map-side combine bounds the shuffle at touched-cells × partitions);
-step 2 is a tiny per-(chan,pol) aggregate joined broadcast; step 3 is an
-equi-join of the vis facts against the cell grid — broadcast when the
-grid is small (``n_u·n_v`` bounded), shuffle-hash on the cell key
-otherwise. No UDFs anywhere; the whole plan stays in whole-stage codegen.
+Spark-first shape: step 1 is a one-pass Hermitian explode + groupBy
+sum (map-side combine bounds the shuffle at touched-cells × partitions);
+step 2 is window sums over the grid (``Window.partitionBy(chan, pol)``:
+Σgrid_w and Σgrid_w²), so every grid row carries its plane's
+``(f1, f2)`` in the one broadcast; step 3 is a single left equi-join of
+the vis facts against that grid — broadcast when the grid is small
+(``n_u·n_v`` bounded), shuffle-hash on the cell key otherwise. The
+grid has one consumer, so nothing is checkpointed or cached and the
+builder launches no Spark job. No UDFs anywhere; the whole plan stays
+in whole-stage codegen.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cngi_prototype_spark.imaging.grid import C_M_S, GridParms
@@ -74,31 +78,26 @@ def grid_weights(df: DataFrame, gp: GridParms, *, u: str = "u", v: str = "v",
             .agg(F.sum("_w").alias("grid_w")))
 
 
-def briggs_factors(weight_grid: DataFrame, weighting: str, robust: float,
-                   *, chan: str = "chan", pol: str = "pol",
-                   briggs_abs_noise: float = 1.0) -> DataFrame:
-    """Per-(chan,pol) ``(f1, f2)`` (make_imaging_weight.py:199-213).
+def _factors(weighting: str, robust: float, briggs_abs_noise: float,
+             sum_w: Column, sum_sq: Column) -> tuple[Column, Column]:
+    """Per-(chan,pol) ``(f1, f2)`` (make_imaging_weight.py:199-213) from
+    the plane's ``Σ grid_w`` and ``Σ grid_w²``; raises on an unknown
+    weighting before anything is built.
 
     ``sum_weight`` for the 1-tap imaging-weight grid is ``2·Σw``, which
     equals ``Σ_cells grid_w`` — both scatter arms land in bounds for any
     uv point whose conjugate is also on the grid, matching the reference
     double-accumulation (SG:358-366 with do_imaging_weight).
     """
-    per = weight_grid.groupBy(chan, pol).agg(
-        F.sum(F.col("grid_w") * F.col("grid_w")).alias("_sq"),
-        F.sum("grid_w").alias("_sw"),
-    )
     if weighting == "briggs":
-        f1 = (F.lit(float(5.0 * 10.0 ** (-robust)) ** 2)) * F.col("_sw") / F.col("_sq")
-        f2 = F.lit(1.0)
-    elif weighting == "briggs_abs":
-        f1 = F.lit(float(robust) ** 2)
-        f2 = F.lit(2.0 * float(briggs_abs_noise) ** 2)
-    elif weighting == "uniform":
-        f1, f2 = F.lit(1.0), F.lit(0.0)
-    else:
-        raise ValueError(f"unknown weighting: {weighting}")
-    return per.select(chan, pol, f1.alias("f1"), f2.alias("f2"))
+        f1 = F.lit(float(5.0 * 10.0 ** (-robust)) ** 2) * sum_w / sum_sq
+        return f1, F.lit(1.0)
+    if weighting == "briggs_abs":
+        return (F.lit(float(robust) ** 2),
+                F.lit(2.0 * float(briggs_abs_noise) ** 2))
+    if weighting == "uniform":
+        return F.lit(1.0), F.lit(0.0)
+    raise ValueError(f"unknown weighting: {weighting}")
 
 
 def make_imaging_weight(
@@ -124,36 +123,37 @@ def make_imaging_weight(
     if weighting == "natural":
         return df.withColumn(out, F.col(weight))
 
-    g = grid_weights(df, gp, u=u, v=v, freq=freq, weight=weight, chan=chan, pol=pol)
-    # r14: the grid is read twice (factors aggregate + degrid join) and
-    # is bounded by touched cells (≤ n_u·n_v per plane, the same bound
-    # class as the broadcast below) — an eager localCheckpoint stops
-    # the second consumer from re-scanning the visibilities and
-    # re-running the scatter shuffle (measured: 10 scans → 6 across
-    # the briggs+uniform bench pair).
-    g = g.localCheckpoint()
-    f = F.broadcast(briggs_factors(g, weighting, robust, chan=chan, pol=pol,
-                                   briggs_abs_noise=briggs_abs_noise))
+    plane = Window.partitionBy(chan, pol)
+    f1, f2 = _factors(weighting, robust, briggs_abs_noise,
+                      F.sum("grid_w").over(plane),
+                      F.sum(F.col("grid_w") * F.col("grid_w")).over(plane))
+    # alias the grid's key columns so the equi-join condition can't
+    # collapse onto the shared lineage (chan==chan would be trivially
+    # true and silently degrade to a cross join filter) — after the
+    # window, so its shuffle carries each key once; f1/f2 are literals
+    # for uniform/briggs_abs, so only briggs plans the window
+    g = (grid_weights(df, gp, u=u, v=v, freq=freq, weight=weight, chan=chan,
+                      pol=pol)
+         .select(chan, pol, "u_idx", "v_idx", "grid_w",
+                 f1.alias("f1"), f2.alias("f2"))
+         .select(F.col(chan).alias("_gchan"), F.col(pol).alias("_gpol"),
+                 "u_idx", "v_idx", "grid_w", "f1", "f2"))
     if gp.n_u * gp.n_v <= _BROADCAST_CELLS:
         g = F.broadcast(g)
 
     cu, cv, _, _ = _cell_cols(gp, F.col(u), F.col(v), F.col(freq))
     vis = df.withColumn("_cu", cu).withColumn("_cv", cv)
-    # alias the grid's key columns so the equi-join condition can't
-    # collapse onto the shared lineage (chan==chan would be trivially
-    # true and silently degrade to a cross join filter)
-    g_aliased = g.select(F.col(chan).alias("_gchan"), F.col(pol).alias("_gpol"),
-                         "u_idx", "v_idx", "grid_w")
     joined = (
-        vis.join(g_aliased, on=[F.col(chan) == F.col("_gchan"),
-                                F.col(pol) == F.col("_gpol"),
-                                F.col("_cu") == F.col("u_idx"),
-                                F.col("_cv") == F.col("v_idx")],
+        vis.join(g, on=[F.col(chan) == F.col("_gchan"),
+                        F.col(pol) == F.col("_gpol"),
+                        F.col("_cu") == F.col("u_idx"),
+                        F.col("_cv") == F.col("v_idx")],
                  how="left")
         .drop("_gchan", "_gpol", "u_idx", "v_idx")
-        .join(f, on=[chan, pol], how="left")
     )
-    # degrid read-back (SG:530-546): empty/NaN sample or cell -> weight
+    # degrid read-back (SG:530-546): empty/NaN sample or cell -> weight;
+    # f1/f2 are null exactly where grid_w is, so they are never read
+    # outside a matched cell
     usable = (F.col(weight).isNotNull() & (F.col(weight) != 0)
               & F.col("grid_w").isNotNull() & (F.col("grid_w") != 0)
               & _in_bounds(gp, F.col("_cu"), F.col("_cv")))

@@ -23,7 +23,10 @@ Checked per query, on the plan Spark actually builds at the audited SF:
   (whitelist it with a reason).
 
 Everything else is recorded as evidence, not judged: exchange count,
-broadcast-hint count, pushed-filter strings, per-scan read widths.
+broadcast-hint count, pushed-filter strings, per-scan read widths, and
+``build_jobs`` — the Spark jobs the query's builder launched (parquet
+schema reads included), so "builders launch no undeclared jobs" reads
+off the committed report.
 
 Run the full audit with ``python tools/plan_audit.py`` (writes
 ``PLAN_AUDIT.json``); tests/test_plan_audit.py gates a representative
@@ -38,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cngi_prototype_spark.plans.inspect import (
     broadcast_hint_count,
+    build_jobs,
     count_exchanges,
     explain_formatted,
 )
@@ -155,8 +159,9 @@ def audit_registry(spark: SparkSession, sf_dir: str,
         if only and qname not in only:
             continue
         try:
-            df = fn(spark, sf_dir)
-            report[qname] = audit_df(df, widths, name=qname)
+            df, jobs = build_jobs(spark, lambda: fn(spark, sf_dir))
+            report[qname] = {**audit_df(df, widths, name=qname),
+                             "build_jobs": jobs}
         except Exception as e:  # noqa: BLE001 — report, don't die
             report[qname] = {"error": f"{type(e).__name__}: {e}"[:200],
                              "violations": ["build_error"]}

@@ -13,6 +13,8 @@ slowdown to the 100 TB cluster.
 from __future__ import annotations
 
 import re
+import uuid
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
@@ -50,6 +52,30 @@ def broadcast_hint_count(df: DataFrame) -> int:
     the scale contract is "only bounded-size sides are ever hinted"."""
     plan = df._jdf.queryExecution().analyzed().toString()
     return len(re.findall(r"ResolvedHint \(strategy=broadcast\)", plan))
+
+
+def build_jobs(spark, fn: Callable[[], Any]) -> tuple[Any, int]:
+    """Call the builder ``fn()`` under a fresh job group and return
+    ``(its result, the number of Spark jobs it launched)``.
+
+    A builder should only describe work; a nonzero count means it ran
+    some eagerly (a checkpoint, a count, a partition-count probe that
+    materializes adaptive query stages). The caller's job group is
+    restored afterwards.
+    """
+    sc = spark.sparkContext
+    group = f"build_jobs.{uuid.uuid4().hex}"
+    prev = (sc.getLocalProperty("spark.jobGroup.id"),
+            sc.getLocalProperty("spark.job.description"))
+    sc.setJobGroup(group, "plan build")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev[0])
+        sc.setLocalProperty("spark.job.description", prev[1])
+    # the status tracker is fed by the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def shuffle_totals(spark) -> dict[str, int] | None:

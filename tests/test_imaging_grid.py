@@ -132,11 +132,15 @@ def test_cancelling_taps_still_emit_touched_cells(spark, variant):
 
 
 def test_dense_planes_subsalt_parity(spark):
-    """Few planes + many input partitions trigger the fat-row sub-salt
-    (multiple collect_list partials per slab); the consumer's slab sum
-    must make the result identical to the explode variant."""
+    """Few planes + many input partitions: each fat row holds one input
+    partition's rows of its slab (the collect_list aggregate emits more
+    rows than there are slabs, none longer than the largest input
+    partition); the gridding task's slab sum must make the result
+    identical to the explode variant."""
     import numpy as np
     import pandas as pd
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
 
     from cngi_prototype_spark.imaging.grid import GridParms, grid_visibilities
 
@@ -151,12 +155,21 @@ def test_dense_planes_subsalt_parity(spark):
     })
     gp = GridParms(n_u=64, n_v=64, cell_u=2e-5, cell_v=2e-5,
                    support=7, oversampling=100)
-    # 1 plane, 300 input partitions -> nsub > 1 (multiple partials/slab)
+    # 1 plane over 64 one-column slabs, 300 input partitions
     df = spark.createDataFrame(pdf).repartition(300)
     fast, _ = grid_visibilities(df, gp, variant="kernel", n_planes=1,
                                 dense_planes=True)
     fp = fast.toPandas()
-    assert len(fp) > 64, "sub-salt should emit multiple partials per slab"
+    # the fat rows: the collect_list aggregate the mapInArrow consumes
+    agg = fast._jdf.queryExecution().analyzed().children().apply(0)
+    fat = DataFrame(spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, agg), spark)
+    sizes = fat.select(F.size("_rows").alias("n")).toPandas()["n"]
+    largest = df.groupBy(F.spark_partition_id()).count().agg(
+        F.max("count")).first()[0]
+    assert len(sizes) > 64
+    assert sizes.max() <= largest
+    assert len(fp) <= 64, "one partial per slab"
     ref, _ = grid_visibilities(spark.createDataFrame(pdf), gp,
                                variant="explode")
     rp = ref.toPandas()

@@ -34,6 +34,8 @@ def numpy_imaging_weight(pdf: pd.DataFrame, gp: GridParms, weighting: str, robus
             g = grids[key]
             if weighting == "uniform":
                 f1, f2 = 1.0, 0.0
+            elif weighting == "briggs_abs":
+                f1, f2 = robust ** 2, 2.0
             else:
                 f1 = (5.0 * 10.0 ** (-robust)) ** 2 * g.sum() / (g ** 2).sum()
                 f2 = 1.0
@@ -63,7 +65,8 @@ def vis_pdf():
     return pdf
 
 
-@pytest.mark.parametrize("weighting,robust", [("briggs", 0.5), ("briggs", -1.0), ("uniform", 0.0)])
+@pytest.mark.parametrize("weighting,robust", [("briggs", 0.5), ("briggs", -1.0), ("uniform", 0.0),
+                                              ("briggs_abs", 0.7)])
 def test_imaging_weight_matches_spec(spark, vis_pdf, weighting, robust):
     df = spark.createDataFrame(vis_pdf).repartition(4)
     out = make_imaging_weight(df, GP, weighting=weighting, robust=robust)
@@ -77,3 +80,37 @@ def test_natural_weight_is_identity(spark, vis_pdf):
     out = make_imaging_weight(df, GP, weighting="natural")
     got = out.select("rid", "imaging_weight").toPandas().sort_values("rid")
     np.testing.assert_array_equal(got["imaging_weight"].to_numpy(), vis_pdf["weight"].to_numpy())
+
+
+@pytest.mark.parametrize("weighting", ["briggs", "uniform", "briggs_abs"])
+def test_imaging_builders_launch_no_jobs(spark, vis_pdf, weighting):
+    """make_imaging_weight and the dense-planes make_image only describe
+    work: no checkpoint of the weight grid, no partition-count probe of
+    the weighted input (which would run its query stages at build)."""
+    from cngi_prototype_spark.imaging.image import make_image
+    from cngi_prototype_spark.plans import build_jobs
+
+    df = spark.createDataFrame(vis_pdf.assign(
+        data_re=1.0, data_im=0.0)).repartition(3)
+    weighted, jobs = build_jobs(spark, lambda: make_imaging_weight(
+        df, GP, weighting=weighting, robust=0.5))
+    assert jobs == 0
+    gp = GridParms(n_u=32, n_v=32, cell_u=2.0e-5, cell_v=2.0e-5,
+                   support=3, oversampling=10)
+    planes, jobs = build_jobs(spark, lambda: make_image(
+        weighted, gp, image_size=(16, 16), weight="imaging_weight",
+        variant="kernel", n_planes=4, output="planes"))
+    assert jobs == 0
+    assert len(planes.toPandas()) == 4
+
+
+def test_unknown_weighting_raises_before_building(spark, vis_pdf):
+    from cngi_prototype_spark.plans import build_jobs
+
+    df = spark.createDataFrame(vis_pdf).repartition(3)
+
+    def build():
+        with pytest.raises(ValueError, match="unknown weighting"):
+            make_imaging_weight(df, GP, weighting="bogus")
+
+    assert build_jobs(spark, build)[1] == 0

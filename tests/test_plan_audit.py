@@ -75,6 +75,9 @@ def test_registry_subset_clean(spark):
     report = audit_registry(spark, SF_DIR, only=SUBSET)
     assert report["n_queries"] == len(SUBSET)
     assert report["violations"] == {}, report["violations"]
+    # builder jobs are evidence, recorded for every query
+    assert all(isinstance(q["build_jobs"], int) and q["build_jobs"] >= 0
+               for q in report["queries"].values())
 
 
 def test_estimated_size_helpers(spark):

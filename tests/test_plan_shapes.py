@@ -458,15 +458,57 @@ def test_lm_scoring_single_corpus_scan(spark):
     assert len(read_schemas(df)) == 1
 
 
+def _executed_parquet_scans(spark, since: int) -> tuple[int, int]:
+    """(parquet scan nodes that produced rows, newest execution id)
+    over the SQL executions after ``since`` — read from the SQL status
+    store, so work run eagerly at build time counts too."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    scans, newest = 0, since
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid <= since:
+            continue
+        newest = max(newest, eid)
+        ran = {int(t._1()) for t in _iter(store.executionMetrics(eid))}
+        nodes = store.planGraph(eid).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if not node.name().startswith("Scan parquet"):
+                continue
+            ms = node.metrics()
+            scans += any(ms.apply(m).name() == "number of output rows"
+                         and int(ms.apply(m).accumulatorId()) in ran
+                         for m in range(ms.size()))
+    return scans, newest
+
+
+def _iter(jmap):
+    it = jmap.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
 def test_imaging_weights_single_grid_build_per_weighting(spark):
-    """r14: the 1-tap weight grid builds once per weighting (Hermitian
-    arms explode from one pass; the grid checkpoint feeds both the
-    factors aggregate and the degrid join) — the briggs+uniform bench
-    union scans the visibilities twice (once per final degrid join),
-    not ten times."""
+    """The 1-tap weight grid builds from one pass (Hermitian arms
+    explode together) and reaches the degrid join through the one
+    broadcast that also carries the briggs factors. From build through
+    collect, the briggs+uniform bench union scans the visibilities
+    three times: the two weightings' identical grid scatter shuffles
+    are one reused exchange (nothing checkpoints the grid, so Spark
+    sees the shared subtree), plus one degrid join per weighting. The
+    build itself runs no Spark job beyond the events schema read."""
     import bench
-    df = bench.BENCH_OVERRIDES["imaging_weights"](spark, SF)
-    assert len(read_schemas(df)) == 2
+    from cngi_prototype_spark.plans import build_jobs
+
+    _, last = _executed_parquet_scans(spark, -1)
+    with Q._events_source(spark.read.parquet(f"{SF}/events.parquet")):
+        df, jobs = build_jobs(spark, lambda: bench.BENCH_OVERRIDES[
+            "imaging_weights"](spark, SF))
+    assert jobs == 0
+    df.collect()
+    assert _executed_parquet_scans(spark, last)[0] == 3
 
 
 def test_minhash_lsh_candidates_one_corpus_shuffle(spark):

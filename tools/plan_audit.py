@@ -30,7 +30,8 @@ def main() -> int:
     for qname, q in sorted(report["queries"].items()):
         tag = "FAIL" if q["violations"] else "ok  "
         extra = (f" violations={q['violations']}" if q["violations"] else
-                 f" exch={q.get('n_exchanges')} scans={len(q.get('scans', []))}")
+                 f" exch={q.get('n_exchanges')} scans={len(q.get('scans', []))}"
+                 f" build_jobs={q.get('build_jobs')}")
         print(f"{tag} {qname}{extra}")
     print(f"{report['n_clean']}/{report['n_queries']} clean")
     if only is None:
