@@ -1474,6 +1474,9 @@ def main() -> None:
         except Exception as e:
             chiles = {"error": f"subprocess: {chiles_err}; in-process "
                                f"{type(e).__name__}: {e}"[:300]}
+    # r15+ runs measure after the query session (r12-r14 ran first);
+    # the flag keeps their vs_baseline values apart
+    chiles["chiles_after_main"] = True
     if "_uniform_sec" in chiles:
         timings["imaging_chiles_frac"] = chiles.pop("_uniform_sec")
         timings["imaging_chiles_frac_skew"] = chiles.pop("_skew_sec")
@@ -1643,16 +1646,7 @@ def _chiles_in_subprocess(sf_dir: str, cpus: int):
         proc = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--chiles-tier"],
             env={**os.environ, "SPARK_GRAFT_SF_DIR": sf_dir,
-                 "SPARK_GRAFT_CPUS": str(cpus),
-                 # rep=512 (51.2M vis) needs more than the 8g unit-test
-                 # default: round 8's driver bench OOMed the skew tier
-                 # (Java heap) at 8g. The box has 128 GiB; 32g fits the
-                 # persisted vis + 32 concurrent fat-row buffers with
-                 # headroom while staying far from the 64g GC-thrash
-                 # regime measured on shuffle-heavy queries. An explicit
-                 # SPARK_GRAFT_MEM still wins.
-                 "SPARK_GRAFT_MEM": os.environ.get("SPARK_GRAFT_MEM",
-                                                   "32g")},
+                 "SPARK_GRAFT_CPUS": str(cpus)},
             # outer cap = the tier's internal deadline (default 900 s,
             # see _chiles_tier) + startup/materialize/teardown margin;
             # the internal deadline is what normally bounds a degraded
@@ -1794,7 +1788,12 @@ def _chiles_tier(sf_dir: str, cpus: int, gc_quiet: dict,
     skipped and the runs recorded so far are emitted (flagged
     ``deadline_hit``). One degraded window can therefore never eat the
     bench's outer budget — the worst measured heavy-steal pair was
-    ~85 s, so even a late deadline check strands at most ~2 runs."""
+    ~85 s, so even a late deadline check strands at most ~2 runs.
+
+    ``SPARK_GRAFT_CHILES_REP`` (default 512: 51.2M vis) scales the
+    input; on a host without ~32 GiB for the ``--chiles-tier`` heap,
+    ``SPARK_GRAFT_CHILES_REP=128`` (12.8M vis, the same gridder path
+    including ``salt_probe``) completes."""
     deadline = float(os.environ.get("SPARK_GRAFT_CHILES_DEADLINE",
                                     "900"))
     t_tier0 = time.time()
@@ -1972,6 +1971,14 @@ if __name__ == "__main__":
             sys.exit(1)
     elif "--chiles-tier" in sys.argv:
         Q.PRECISE = False
+        # rep=512 (51.2M vis) needs more than the 8g session default:
+        # round 8's driver bench OOMed the skew tier (Java heap) at 8g.
+        # 32g fits the persisted vis + 32 concurrent fat-row buffers
+        # with headroom while staying far from the 64g GC-thrash regime
+        # measured on shuffle-heavy queries. Set here so a direct run
+        # and bench.py's own subprocess launch run the same
+        # configuration; an explicit SPARK_GRAFT_MEM still wins.
+        os.environ.setdefault("SPARK_GRAFT_MEM", "32g")
         _sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         _cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
         try:

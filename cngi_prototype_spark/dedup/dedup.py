@@ -127,39 +127,25 @@ def minhash_lsh_candidates(
     # are exactly the id_a < id_b pairs, and the bucket-size guardrail
     # becomes a size() filter on the same count.
     #
-    # r15 memory guardrail: filtering AFTER the agg still BUILDS a
+    # r15 memory guardrail: filtering AFTER the agg would still BUILD a
     # degenerate bucket's full id array in one task's aggregation
     # buffer before the size() filter discards it — unbounded memory
-    # under mass-duplicated boilerplate. When the corpus is big enough
-    # that the cap can bind, a window count over the SAME keys the
-    # groupBy shuffles on applies the bucket filter BEFORE collect_list
-    # (cosine_pairs_lsh's design): the window's buffer is a spillable
-    # sort, the partitioning is established once (no second exchange —
-    # the groupBy reuses it), and collect_list then only ever sees
-    # buckets <= max_bucket. Same single corpus shuffle, same pair set
-    # (the window count equals size(_ids) — one melted row per (doc,
-    # band)). When the row ESTIMATE (deliberately biased high: 16 B/row
-    # divisor, so est >= true rows and est <= cap implies no bucket can
-    # reach the cap) stays under max_bucket, the window pass is skipped
-    # — the r14 plan unchanged.
-    from cngi_prototype_spark.plans.inspect import estimated_rows
-
-    est = estimated_rows(df, bytes_per_row=16)
-    if est is None or est > max_bucket:
-        sized = melted.withColumn(
-            "_n", F.count(F.lit(1)).over(Window.partitionBy("band",
-                                                            "bhash")))
-        buckets = (sized.filter((F.col("_n") >= 2)
-                                & (F.col("_n") <= max_bucket))
-                   .groupBy("band", "bhash")
-                   .agg(F.sort_array(F.collect_list(F.col(id_col)))
-                        .alias("_ids")))
-    else:
-        buckets = (melted.groupBy("band", "bhash")
-                   .agg(F.sort_array(F.collect_list(F.col(id_col)))
-                        .alias("_ids"))
-                   .filter((F.size("_ids") >= 2)
-                           & (F.size("_ids") <= max_bucket)))
+    # under mass-duplicated boilerplate. A window count over the SAME
+    # keys the groupBy shuffles on applies the bucket filter BEFORE
+    # collect_list (cosine_pairs_lsh's design): the window's buffer is
+    # a spillable sort, the partitioning is established once (no second
+    # exchange — the groupBy reuses it), and collect_list then only ever
+    # sees buckets <= max_bucket. Same single corpus shuffle, same pair
+    # set (the window count equals size(_ids) — one melted row per
+    # (doc, band)). The window runs for every input: no size estimate
+    # can switch the cap off.
+    sized = melted.withColumn(
+        "_n", F.count(F.lit(1)).over(Window.partitionBy("band", "bhash")))
+    buckets = (sized.filter((F.col("_n") >= 2)
+                            & (F.col("_n") <= max_bucket))
+               .groupBy("band", "bhash")
+               .agg(F.sort_array(F.collect_list(F.col(id_col)))
+                    .alias("_ids")))
     return (buckets
             .select(F.col("_ids"),
                     F.posexplode("_ids").alias("_i", "id_a"))

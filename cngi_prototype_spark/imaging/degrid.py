@@ -30,6 +30,7 @@ from cngi_prototype_spark.imaging.grid import (
     _cgk_at,
     _flit_arr,
     _scaled_pos,
+    _slab_salt_map,
     _tap_explode,
     _tap_iu_iv,
 )
@@ -352,32 +353,6 @@ def _est_row_bytes(schema: T.StructType) -> int:
         t = f.dataType.typeName()
         width += fixed.get(t, 48 if t in ("string", "binary") else 32)
     return width
-
-
-def _slab_salt_map(cnts: list[tuple[tuple, int]], npart: int,
-                   cap_rows: int = (64 << 20) // 56,
-                   ) -> dict[tuple, int]:
-    """Sub-bucket factors for hot degrid slabs, from probed per-group
-    vis counts. A group splits when it exceeds a core's fair share
-    (wall-clock: the stage runs at ~max(total/npart, max_group), so
-    splitting smaller groups buys nothing — grid.py's fair-share
-    trigger) or when its Arrow frame would outgrow ~64 MB at the
-    schema-estimated row width (memory: the cogroup materializes the
-    whole group). The fairness factor is npart-bounded; the byte
-    factor is not — memory correctness beats scheduling granularity."""
-    if not cnts:
-        return {}
-    total = sum(n for _, n in cnts)
-    fair = max(1.0, total / max(1, npart))
-    out: dict[tuple, int] = {}
-    for key, n in cnts:
-        sub_f = (min(npart, -(-n // max(1, int(fair / 2.0))))
-                 if n > 0.75 * fair else 1)
-        sub_b = -(-n // cap_rows)
-        sub = max(sub_f, sub_b)
-        if sub > 1:
-            out[key] = int(sub)
-    return out
 
 
 def model_image_to_grid(

@@ -20,29 +20,28 @@ Two physical strategies, same semantics:
    (SG:58-120), but chosen adaptively by AQE instead of hand-built.
    Whole-stage codegen keeps the kernel-weight arithmetic JVM-side.
 
-2. ``variant="kernel"`` — Arrow-batched ``mapInPandas``: a vectorized
-   numpy scatter (per-tap 1-D bincount loop; u-axis kernel factors
-   computed once per iu and reused across iv) builds *partial dense
-   grids per partition*, emitted as sparse nonzero cells and combined
-   by the same final ``groupBy`` sum. Preferred when ``support`` is
-   large (taps grow quadratically) or the touched-cell count per task
-   approaches the full grid, making the dense partial strictly smaller.
+2. ``variant="kernel"`` — numpy scatter in Python workers, two outputs:
 
-   With ``dense_planes=True`` (cube-imaging fast path, used by
-   ``make_image(output="planes")``): rows group JVM-side into one fat
-   ``collect_list(struct)`` row per (chan, pol, u-slab) and input
-   partition — one exchange, hash-partitioned on the slab alone, so a
-   fat row never holds more than one input partition's rows of its
-   slab and no partition count is probed at build — each
-   ``mapInArrow`` task sums its slabs' fat rows into L2-resident slab
-   arrays, and partials are emitted as WHOLE ARRAYS (one row per
-   plane-slab) — no per-cell row explosion; the FFT consumer places
-   and sums slabs directly. At the CHILES shape
-   (support 17, 1024² padded grid) this path matches-or-beats the
-   reference prototype's per-core gridding throughput (vs_baseline
-   0.92-1.08 across bench runs; see bench.py imaging_chiles_frac)
-   where sparse-cell emission was ~10x off and the earlier
-   row-at-a-time Arrow feed ~3x off.
+   - sparse cells (the default, and the ``precise`` gate mode):
+     ``mapInPandas`` builds a partial dense grid per partition, emits
+     its touched cells and combines them by the same final ``groupBy``
+     sum (``_kernel_variant``);
+   - dense planes (``dense_planes=True``, used by
+     ``make_image(output="planes")``): the six small geometry integers
+     pack into one int64 key, rows group JVM-side into one fat
+     ``collect_list(struct)`` row per (chan, pol, u-slab) and input
+     partition behind one exchange, and each ``mapInArrow`` task sums
+     its slabs into L2-resident arrays emitted WHOLE — one row per
+     plane-slab, no per-cell row explosion; the FFT consumer places
+     and sums slabs directly (``_dense_planes_arrow``). At the CHILES
+     shape (support 17, 1024² padded grid) this matches-or-beats the
+     reference prototype's per-core gridding throughput (vs_baseline
+     0.92-1.08 across bench runs; see bench.py imaging_chiles_frac)
+     where sparse-cell emission was ~10x off and the earlier
+     row-at-a-time Arrow feed ~3x off. Packing needs oversampling ≤
+     254 and a grid whose widest slab flat-indexes in int32 (every
+     grid up to 32768², see ``_pack_bits``); other shapes raise and
+     take ``output="cells"``.
 
 The per-visibility kernel normalization is separable
 (``Σ_{u,v} conv_u·conv_v = (Σ conv_u)(Σ conv_v)``), so the
@@ -55,6 +54,7 @@ enters multiplied by the *kernel* norm of taps actually applied.
 
 from __future__ import annotations
 
+from collections.abc import Hashable
 from dataclasses import dataclass
 
 import numpy as np
@@ -180,7 +180,6 @@ def grid_visibilities(
     n_planes: int | None = None,
     dense_planes: bool = False,
     salt_probe: bool = False,
-    rows_hint: int | None = None,
     with_psf: bool = False,
     fuse_sumw: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
@@ -189,6 +188,17 @@ def grid_visibilities(
     grid_df: one row per touched cell ``(chan, pol, u_idx, v_idx,
     grid_re, grid_im)``; sum_weight_df: ``(chan, pol, sum_weight)``.
     ``re=None`` grids the weights themselves (PSF mode, SG:62-67).
+
+    ``dense_planes=True`` (kernel variant, production mode only)
+    replaces grid_df with dense partial planes: one row per
+    (chan, pol, u-slab) partial ``(chan, pol, u0, grid_re, grid_im,
+    sum_w_norm)`` — the flat (slab height × n_v) re/im slab starting
+    at grid row ``u0`` and the slab's share of the sum of weights —
+    placed and summed per plane by ``image_planes_from_dense``.
+    ``n_planes`` (the caller's plane count) sizes the u-slabs so
+    every core gets work; ``salt_probe=True`` adds one counting job
+    at build that sub-buckets hot slabs (``_dense_planes_arrow``).
+    Grids ``_pack_bits`` cannot pack raise ``ValueError`` at build.
 
     ``with_psf=True`` (explode variant) adds a ``psf_re`` column —
     the weight-sampling grid — to the SAME aggregation, so a CLEAN
@@ -407,16 +417,25 @@ def grid_visibilities(
         return grid, sum_weight
 
     if variant == "kernel":
-        # dense fast path: fuse sum-of-weights into the scatter shuffle
-        # (the wn expression reuses the codegen norm LUT above); the
-        # standalone sum_weight branch stays lazily available for
-        # callers that want it, but make_image's planes path normalizes
-        # from the embedded per-slab sums and never executes it.
-        wn = F.col(weight) * (nu * nv) if (dense_planes and not precise) else None
-        grid = _kernel_variant(prepared, gp, cgk, chan=chan, pol=pol,
-                               precise=precise, n_planes=n_planes,
-                               dense_planes=dense_planes, wn_col=wn,
-                               salt_probe=salt_probe, rows_hint=rows_hint)
+        if not dense_planes:
+            return _kernel_variant(prepared, gp, cgk, chan=chan, pol=pol,
+                                   precise=precise), sum_weight
+        if precise:
+            raise ValueError("dense_planes is the production fast path; "
+                             "precise gate mode emits sparse cells")
+        if _pack_bits(gp) is None:
+            raise ValueError(
+                f"dense_planes cannot pack oversampling={gp.oversampling} "
+                f"on a {gp.n_u}x{gp.n_v} grid (needs oversampling <= 254 "
+                f"and an int32-indexable slab); use output='cells'")
+        # the standalone sum_weight branch stays lazily available;
+        # make_image's planes path normalizes from the embedded
+        # per-slab sums (wn reuses the codegen norm LUT above) and never
+        # executes it
+        grid = _dense_planes_arrow(prepared, gp, cgk, chan=chan, pol=pol,
+                                   n_planes=n_planes,
+                                   wn_col=F.col(weight) * (nu * nv),
+                                   salt_probe=salt_probe)
         return grid, sum_weight
 
     raise ValueError(f"unknown gridder variant: {variant}")
@@ -425,60 +444,91 @@ def grid_visibilities(
 def _pack_bits(gp: GridParms) -> tuple[int, int] | None:
     """Bit budget for the packed-key dense fast path: returns
     ``(bu, bv)`` (bits for u_c / v_c) or None when the grid shape can't
-    pack. Layout (low→high): dv+128 (8) | du+128 (8) | v_c (bv) |
-    u_c (bu) | pol (4) | chan (rest). Preconditions: oversampling ≤ 254
-    (|du| ≤ ov/2 + 1 < 128), pol < 16, chan < 2^(44-bu-bv) — bounds any
-    real radio dataset satisfies (CHILES: 30 720 chans, 4 pols)."""
+    pack. Layout (low→high, sign bit clear): dv+128 (8) | du+128 (8) |
+    v_c (bv) | u_c (bu) | pol (4) | chan (the remaining 43-bu-bv).
+    Preconditions: oversampling ≤ 254 (|du| ≤ ov/2 + 1 < 128), at
+    least one chan bit, and the widest slab — 2^bu rows plus the kernel
+    halo — flat-indexes in int32, the scatter's index type. Any grid
+    whose plane the FFT consumer can hold (≤ 16384², 4 GiB complex)
+    packs with ≥ 15 chan bits (CHILES: 30 720 chans); per-row chan
+    and pol overflow is checked at run time."""
     if gp.oversampling > 254:
         return None
     bu = max(1, int(np.ceil(np.log2(gp.n_u))))
     bv = max(1, int(np.ceil(np.log2(gp.n_v))))
-    if bu + bv > 24:
+    widest_slab = ((1 << bu) + 2 * gp.half) * gp.n_v
+    if 16 + bv + bu + 4 >= 63 or widest_slab >= 1 << 31:
         return None
     return bu, bv
+
+
+def _slab_salt_map(cnts: list[tuple[Hashable, int]], npart: int,
+                   cap_rows: int = (64 << 20) // 56,
+                   ) -> dict[Hashable, int]:
+    """Sub-bucket factors for hot slab groups, from probed per-group
+    row counts — the one salt planner of the dense gridder's and the
+    degridder's ``salt_probe`` valves. A group splits when it exceeds
+    a core's fair share (wall-clock: the stage runs at ~max(total /
+    npart, max_group), so splitting smaller groups buys nothing) or
+    when it holds more than ``cap_rows`` rows (memory: the consumer
+    materializes the whole group, so the caller sizes ``cap_rows`` as
+    ~64 MB over its row width). The fairness factor is npart-bounded;
+    the byte factor is not — memory correctness beats scheduling
+    granularity. Groups that need no split are absent from the map."""
+    if not cnts:
+        return {}
+    total = sum(n for _, n in cnts)
+    fair = max(1.0, total / max(1, npart))
+    out: dict[Hashable, int] = {}
+    for key, n in cnts:
+        sub_f = (min(npart, -(-n // max(1, int(fair / 2.0))))
+                 if n > 0.75 * fair else 1)
+        sub_b = -(-n // cap_rows)
+        sub = max(sub_f, sub_b)
+        if sub > 1:
+            out[key] = int(sub)
+    return out
 
 
 def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
                         *, chan: str, pol: str,
                         n_planes: int | None,
-                        wn_col: Column | None = None,
-                        salt_probe: bool = False,
-                        rows_hint: int | None = None) -> DataFrame:
-    """Dense-planes scatter, cut for throughput (the CHILES tier):
+                        wn_col: Column,
+                        salt_probe: bool = False) -> DataFrame:
+    """The dense-planes gridder, cut for throughput (the CHILES tier):
 
     - the six small integers (chan, pol, u_c, v_c, du, dv) are packed
-      into ONE int64 JVM-side, so the pre-scatter shuffle moves 3 fields
-      (~32 B/row in UnsafeRow) instead of 8 (~72 B/row), and the
-      group key (chan, pol, u-slab) is a single shift of that key
-      because slabs are power-of-2 wide;
+      into ONE int64 JVM-side (``_pack_bits`` layout), so the
+      pre-scatter shuffle moves one key column instead of six, and the
+      group key (chan, pol, u-slab) is a single shift of that key because
+      slabs are power-of-2 wide;
     - the rows cross the Python boundary as ~n_planes·n_slabs·n_inputs
       FAT rows (``collect_list(struct(k, wr, wi))`` per slab group and
-      input partition), not as
-      25M scalar rows: PySpark's row-at-a-time Arrow feed costs ~8 µs
-      of JVM CPU per row at this scale (measured: a 25.6M-row
-      ``mapInArrow`` passthrough burns every core for ~7 s even from a
-      trivial ``spark.range`` source, while the same bytes as 128
-      array-cells feed in ~0.3 s), so shipping columnar array cells
-      instead of rows removes the single biggest cost in the tier;
+      input partition), not as 25M scalar rows: PySpark's row-at-a-time
+      Arrow feed costs ~8 µs of JVM CPU per row at this scale
+      (measured: a 25.6M-row ``mapInArrow`` passthrough burns every
+      core for ~7 s even from a trivial ``spark.range`` source, while
+      the same bytes as 128 array-cells feed in ~0.3 s);
     - ``mapInArrow`` hands the struct-list children straight to numpy
       (zero-copy), sums a slab's fat rows into one partial plane and
-      emits the partials as one Arrow ListArray per partition;
+      emits the partials as Arrow ListArrays;
     - the per-row 1-D kernel factors come from a (256, support) LUT
       indexed by the packed du byte — one fancy-index gather per axis
       replaces per-tap ``cgk[|ov·iu + du|]`` gathers — and the scatter
-      is ``np.add.at`` over ~1k-row chunks whose tap-value and index
-      temporaries stay cache-resident (int32 indices, rows cell-sorted
-      by the key argsort). Measured on this box: the old per-tap
-      bincount loop collapses from 112M taps/s/core single-thread to
-      ~20M under 32-way load (the materialized (chunk, support²)
-      value/index arrays plus per-call O(slab) bincount zeroing
-      saturate DRAM); the add.at/small-chunk form holds ~50M under the
-      same load because nothing but the input stream and the sorted
-      slab region leaves cache.
+      is one complex ``np.add.at`` over ~1k-row chunks whose tap-value
+      and index temporaries stay cache-resident (int32 indices).
+      Measured at 32-way load: a per-tap bincount loop collapses from
+      112M taps/s/core single-thread to ~20M (the materialized (chunk,
+      support²) arrays plus per-call O(slab) zeroing saturate DRAM);
+      the add.at/small-chunk form holds ~50M.
 
-    Same partial-planes contract as the pandas dense path: one row per
-    (chan, pol, u-slab) with ``u0`` and the flat (h × n_v) re/im slab,
-    summed/placed by ``image_planes_from_dense``.
+    ``wn_col`` (weight·norm_u·norm_v) is summed per fat row inside the
+    same aggregate, so each partial carries its ``sum_w_norm`` and the
+    consumer needs no second pass over the visibilities.
+
+    Output: one row per (chan, pol, u-slab) partial with ``u0`` and
+    the flat (h × n_v) re/im slab, placed and summed by
+    ``image_planes_from_dense``.
     """
     import pyarrow as pa
 
@@ -522,11 +572,8 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     # geometry exprs over 25.6M persisted rows) disappears. The struct
     # shipped through the shuffle is unchanged — only tiny per-group
     # partial sums ride along.
-    sel = [k.alias("_k"), F.col("_wd_re").alias("_wr"),
-           F.col("_wd_im").alias("_wi")]
-    if wn_col is not None:
-        sel.append(wn_col.alias("_wn"))
-    src = prepared.select(*sel)
+    src = prepared.select(k.alias("_k"), F.col("_wd_re").alias("_wr"),
+                          F.col("_wd_im").alias("_wi"), wn_col.alias("_wn"))
     shipped = src.columns
     # one fat row per (chan, pol, u-slab) and INPUT PARTITION: the
     # group id and spark_partition_id() are computed before the one
@@ -539,18 +586,6 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     # count probed at build; every fat row of a group meets in one task,
     # which sums them into one slab partial before emitting.
     n_groups = max(1, int(n_planes or 1)) * max(1, n_u >> slab_log)
-    # MEMORY budget, not just task fairness (round-8 driver bench OOM):
-    # a collect_list element is a 32 B UnsafeRow struct(long, double,
-    # double) plus buffer slack — budget ~48 B/row and cap each fat
-    # row's list at ~64 MB when the caller declares its row count, so a
-    # group's aggregation buffer can never outgrow a task's share of
-    # executor memory even when one input partition piles its rows into
-    # one (plane, u-slab). The consumer sums arbitrarily many partial
-    # slabs, so extra sub-buckets only cost their emission.
-    cap_rows = (64 << 20) // 48  # ~1.4M rows per fat row
-    nsub = 1
-    if rows_hint:
-        nsub = max(1, -(-int(rows_hint) // (n_groups * cap_rows)))
     gkey = F.shiftrightunsigned(F.col("_k"), shift_group)
     # Skew insurance (opt-in: one counting pass over the input at plan
     # build — cheap when the caller has the rows persisted, a full
@@ -558,44 +593,29 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     # uv coverage concentrates taps in few (plane, u-slab) groups;
     # each group is one task's serial unit, so the heaviest group sets
     # the stage's wall-clock. Probe the per-group row counts and
-    # sub-salt ONLY groups that exceed a task's fair share: the p-task
-    # stage's wall-clock is ~max(total/p, max_group), so a group is a
-    # straggler only when its count approaches total/p — splitting
-    # anything smaller (the old 1.5x-mean trigger: round-7's
-    # vs_baseline_skew regression) pays the per-row value-hash +
-    # broadcast-join toll on EVERY row for zero wall-clock gain; 512
-    # groups over 32 cores absorb a 3x-mean group in ordinary task
-    # scheduling. Hot groups split into ~half-fair-share sub-buckets.
-    # This is stats-driven re-planning in the AQE spirit, done where
-    # AQE can't see (skew inside a single aggregate's groups).
+    # sub-salt ONLY groups that exceed a task's fair share (rules in
+    # ``_slab_salt_map``): splitting anything smaller (the old
+    # 1.5x-mean trigger: round-7's vs_baseline_skew regression) pays
+    # the per-row value-hash + broadcast-join toll on EVERY row for zero
+    # wall-clock gain. The byte budget is a MEMORY bound (round-8 driver
+    # bench OOM): a collect_list element is a 32 B UnsafeRow
+    # struct(long, double, double) plus buffer slack — ~48 B/row, so no
+    # sub-bucket's list grows past ~64 MB. This is stats-driven
+    # re-planning in the AQE spirit, done where AQE can't see (skew
+    # inside a single aggregate's groups).
     hot: dict[int, int] = {}
     if salt_probe and n_groups <= 65536:
-        cnts = src.groupBy(gkey.alias("_g")).count().collect()
-        if cnts:
-            total = sum(r["count"] for r in cnts)
-            fair = max(1.0, total / p)
-            for r in cnts:
-                # fairness split (wall-clock: no group past ~half a
-                # task's fair share) is bounded by p — finer buys
-                # nothing; the BYTE split (no fat row past cap_rows)
-                # is NOT p-bounded: memory correctness must win over
-                # scheduling granularity.
-                sub_f = (min(p, int(np.ceil(r["count"] / (fair / 2.0))))
-                         if r["count"] > 0.75 * fair else 1)
-                sub_b = -(-int(r["count"]) // cap_rows)
-                sub = max(sub_f, sub_b)
-                if sub > 1:
-                    hot[int(r["_g"])] = sub
+        cnts = [(int(r["_g"]), int(r["count"]))
+                for r in src.groupBy(gkey.alias("_g")).count().collect()]
+        hot = _slab_salt_map(cnts, p, cap_rows=(64 << 20) // 48)
     if hot:
         # per-group salt factor via a BROADCAST join, never an inline
         # CASE chain: a 100+-branch conditional on the key expression
         # falls out of whole-stage codegen into interpreted eval
         # (measured 6x slower on the skewed CHILES tier — the exact
         # cliff this valve exists to prevent)
-        hot_df = spark.createDataFrame(
-            [(int(g), int(max(s, nsub))) for g, s in hot.items()],
-            schema="_hg bigint, _hsub int")
-        mult = max(max(hot.values()), nsub)
+        hot_df = spark.createDataFrame(list(hot.items()),
+                                       schema="_hg bigint, _hsub int")
         src = (src.withColumn("_g0", gkey)
                .join(F.broadcast(hot_df),
                      F.col("_g0") == F.col("_hg"), "left"))
@@ -606,21 +626,17 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         # split across partials is exact by construction). Cold rows
         # skip the 3-column hash entirely (lazy CASE branch) — with a
         # handful of hot groups the toll must not land on every row.
-        cold = (F.lit(0).cast("long") if nsub == 1
-                else F.pmod(F.xxhash64("_k"), F.lit(nsub)))
-        gkey = (F.col("_g0") * F.lit(mult)
+        gkey = (F.col("_g0") * F.lit(max(hot.values()))
                 + F.when(F.col("_hsub").isNotNull(),
                          F.pmod(F.xxhash64("_k", "_wr", "_wi"),
-                                F.col("_hsub"))).otherwise(cold))
-    elif nsub > 1:
-        gkey = gkey * F.lit(nsub) + F.pmod(F.xxhash64("_k"), F.lit(nsub))
-    aggs = [F.collect_list(F.struct("_k", "_wr", "_wi")).alias("_rows")]
-    if wn_col is not None:
-        aggs.append(F.sum("_wn").alias("_wn"))
+                                F.col("_hsub")))
+                .otherwise(F.lit(0).cast("long")))
     src = (src.select(*shipped, gkey.alias("_g"),
                       F.spark_partition_id().alias("_pid"))
            .repartition(p, "_g")
-           .groupBy("_g", "_pid").agg(*aggs))
+           .groupBy("_g", "_pid")
+           .agg(F.collect_list(F.struct("_k", "_wr", "_wi")).alias("_rows"),
+                F.sum("_wn").alias("_wn")))
 
     # (256, support) LUT over the packed du byte; indices past the
     # half-kernel table are unreachable for valid data — zero them
@@ -631,16 +647,13 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     off = (ius[:, None] * n_v + ius[None, :]).ravel().astype(np.int32)
     h = slab_w + 2 * half
     m = h * n_v
-    fields = [
+    arrow_schema = pa.schema([
         pa.field(chan, pa.int32()), pa.field(pol, pa.int32()),
         pa.field("u0", pa.int32()),
         pa.field("grid_re", pa.list_(pa.float64())),
         pa.field("grid_im", pa.list_(pa.float64())),
-    ]
-    if wn_col is not None:
-        fields.append(pa.field("sum_w_norm", pa.float64()))
-    arrow_schema = pa.schema(fields)
-    with_wn = wn_col is not None
+        pa.field("sum_w_norm", pa.float64()),
+    ])
     chunk = 1024
 
     def grid_arrow(batches):
@@ -649,8 +662,8 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         # (complex multiply by a real factor is componentwise), so the
         # result is BIT-IDENTICAL to the split form, and the single
         # indexed pass runs ~1.55x faster (175 vs 113 Mtaps/s
-        # single-thread on this box) because the index decode + gather
-        # loop is paid once for both components.
+        # single-thread) because the index decode + gather loop is paid
+        # once for both components.
         cw_b = np.empty((chunk, support), np.complex128)
         vz_b = np.empty((chunk, support, support), np.complex128)
         idx_b = np.empty((chunk, support * support), np.int32)
@@ -696,13 +709,14 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
                     idx = np.add(base[c0:c1, None], off[None, :],
                                  out=idx_b[:nc])
                     np.add.at(fg, idx.reshape(-1), vz.reshape(-1))
-                if with_wn:
-                    acc_wn[g] = acc_wn.get(g, 0.0) + (
-                        b.column(3)[ri].as_py() or 0.0)
+                acc_wn[g] = acc_wn.get(g, 0.0) + (
+                    b.column(3)[ri].as_py() or 0.0)
         if not acc:
             return
         gs = np.fromiter(acc, np.int64, len(acc))
-        offs = pa.array(np.arange(len(acc) + 1, dtype=np.int32) * m)
+        # int32 list offsets: overflow raises rather than wraps
+        offs = pa.array(np.arange(len(acc) + 1, dtype=np.int64) * m,
+                        pa.int32())
         arrays = [
             pa.array((gs >> (4 + bu - slab_log)).astype(np.int32)),
             pa.array(((gs >> (bu - slab_log)) & 15).astype(np.int32)),
@@ -711,36 +725,29 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
                 [fg.real for fg in acc.values()]))),
             pa.ListArray.from_arrays(offs, pa.array(np.concatenate(
                 [fg.imag for fg in acc.values()]))),
+            pa.array([acc_wn[g] for g in acc], pa.float64()),
         ]
-        if with_wn:
-            arrays.append(pa.array([acc_wn[g] for g in acc], pa.float64()))
         yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
     import pyspark.sql.types as T
 
-    dense_fields = [
+    return src.mapInArrow(grid_arrow, T.StructType([
         T.StructField(chan, T.IntegerType()),
         T.StructField(pol, T.IntegerType()),
         T.StructField("u0", T.IntegerType()),
         T.StructField("grid_re", T.ArrayType(T.DoubleType())),
         T.StructField("grid_im", T.ArrayType(T.DoubleType())),
-    ]
-    if wn_col is not None:
-        dense_fields.append(T.StructField("sum_w_norm", T.DoubleType()))
-    return src.mapInArrow(grid_arrow, T.StructType(dense_fields))
+        T.StructField("sum_w_norm", T.DoubleType()),
+    ]))
 
 
 def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
-                    *, chan: str, pol: str, precise: bool = False,
-                    n_planes: int | None = None,
-                    dense_planes: bool = False,
-                    wn_col: Column | None = None,
-                    salt_probe: bool = False,
-                    rows_hint: int | None = None) -> DataFrame:
-    """Partial dense grid per partition via vectorized numpy scatter-add;
-    sparse nonzero cells out, final combine by groupBy sum — the
-    reference's per-chunk grid + tree-sum (SG:58-120) with Spark's
-    partial/final aggregation as the tree.
+                    *, chan: str, pol: str, precise: bool = False) -> DataFrame:
+    """Sparse-cell kernel gridder: a partial dense grid per input
+    partition via vectorized numpy scatter-add, its touched cells out,
+    final combine by groupBy sum — the reference's per-chunk grid +
+    tree-sum (SG:58-120) with Spark's partial/final aggregation as the
+    tree. (Dense-plane output is ``_dense_planes_arrow``.)
 
     ``precise`` quantizes each per-tap term with floor(x·1e9) and
     accumulates BIGINT partial grids — integer addition is associative,
@@ -761,25 +768,20 @@ def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     ])
     n_u, n_v, ov, half, support = gp.n_u, gp.n_v, gp.oversampling, gp.half, gp.support
     cgk_arr = cgk  # closure capture; broadcast with the task closure
-    dense_salt = 1
-    if dense_planes and n_planes:
-        _p = int(prepared.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        dense_salt = max(1, -(-4 * _p // max(1, int(n_planes))))
-    slab_w = -(-n_u // dense_salt)
     cols = [chan, pol, "_u_c", "_v_c", "_du", "_dv", "_wd_re", "_wd_im"]
 
-    def _scatter(uu, vv, duu, dvv, wre, wim, h, want_touched=False):
+    def _scatter(uu, vv, duu, dvv, wre, wim):
         # per-tap 1-D loop: the u-axis kernel factor (and its product
         # with the weighted data) is computed ONCE per iu and reused
         # across the iv taps — half the gathers of the 2-D
         # (rows x taps) form, and every temporary is a cache-resident
-        # 1-D array; scatter target is (h, n_v) flattened
-        fre = np.zeros(h * n_v)
-        fim = np.zeros(h * n_v)
+        # 1-D array; scatter target is the (n_u, n_v) grid flattened
+        fre = np.zeros(n_u * n_v)
+        fim = np.zeros(n_u * n_v)
         # touched-cell mask (sparse emission parity with the explode
         # variant, which emits a 0.0 row for taps that exactly cancel);
         # a plain boolean store per tap, far cheaper than a 3rd bincount
-        tou = np.zeros(h * n_v, bool) if want_touched else None
+        tou = np.zeros(n_u * n_v, bool)
         idx_base = uu * n_v + vv
         for iu in range(-half, support - half):
             cu = cgk_arr[np.abs(ov * iu + duu)]
@@ -788,10 +790,9 @@ def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
             for iv in range(-half, support - half):
                 cv = cgk_arr[np.abs(ov * iv + dvv)]
                 idx = base_u + iv
-                fre += np.bincount(idx, cv * cur, minlength=h * n_v)
-                fim += np.bincount(idx, cv * cui, minlength=h * n_v)
-                if tou is not None:
-                    tou[idx] = True
+                fre += np.bincount(idx, cv * cur, minlength=n_u * n_v)
+                fim += np.bincount(idx, cv * cui, minlength=n_u * n_v)
+                tou[idx] = True
         return fre, fim, tou
 
     def grid_batches(batches):
@@ -824,24 +825,7 @@ def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
             uu, vv = u_c[sel][order], v_c[sel][order]
             duu, dvv = du[sel][order], dv[sel][order]
             wre, wim = w_re[sel][order], w_im[sel][order]
-            if dense_planes:
-                # slab-local scatter; one array row per (plane, slab)
-                slab_ids = uu // slab_w
-                for sl in np.unique(slab_ids):
-                    sm = slab_ids == sl
-                    u0 = int(sl) * slab_w - half
-                    h = slab_w + 2 * half
-                    sre, sim, _ = _scatter(uu[sm] - u0, vv[sm], duu[sm],
-                                           dvv[sm], wre[sm], wim[sm], h)
-                    rows.append(pd.DataFrame({
-                        chan: [np.int32(k // 1_000_000)],
-                        pol: [np.int32(k % 1_000_000)],
-                        "u0": [np.int32(u0)],
-                        "grid_re": [sre], "grid_im": [sim],
-                    }))
-                continue
-            fre, fim, tou = _scatter(uu, vv, duu, dvv, wre, wim, n_u,
-                                     want_touched=True)
+            fre, fim, tou = _scatter(uu, vv, duu, dvv, wre, wim)
             flat = np.nonzero(tou)[0]
             ui, vi = flat // n_v, flat % n_v
             rows.append(pd.DataFrame({
@@ -904,53 +888,7 @@ def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         if rows:
             yield pd.concat(rows, ignore_index=True)
 
-    if dense_planes and precise:
-        raise ValueError("dense_planes is the production fast path; "
-                         "precise gate mode emits sparse cells")
-    if dense_planes and _pack_bits(gp) is not None:
-        # packed-key + mapInArrow fast path (same partials contract)
-        return _dense_planes_arrow(prepared, gp, cgk_arr,
-                                   chan=chan, pol=pol, n_planes=n_planes,
-                                   wn_col=wn_col, salt_probe=salt_probe,
-                                   rows_hint=rows_hint)
-    if dense_planes:
-        import pyspark.sql.types as T
-
-        dense_schema = T.StructType([
-            T.StructField(chan, T.IntegerType()),
-            T.StructField(pol, T.IntegerType()),
-            T.StructField("u0", T.IntegerType()),
-            T.StructField("grid_re", T.ArrayType(T.DoubleType())),
-            T.StructField("grid_im", T.ArrayType(T.DoubleType())),
-        ])
-        src = prepared.select(*cols)
-        if n_planes:
-            # salt by CONTIGUOUS u-range, not hash: each (plane, slab)
-            # scatters into a slab-sized array (L2-resident) instead of
-            # the full grid, so the per-tap bincount zeroing is bounded
-            # by the slab and emitted partials stay small
-            spark = prepared.sparkSession
-            p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            salt = F.floor(F.col("_u_c") / F.lit(slab_w))
-            src = src.repartition(p, chan, pol, salt)
-        # partial planes merge in the consumer (array placement + sums
-        # before the FFT)
-        return src.mapInPandas(grid_batches, dense_schema)
-    src = prepared.select(*cols)
-    if n_planes:
-        # co-locate each (chan, pol) plane so a task allocates only its
-        # own partial grids; a small salt keeps all cores busy when the
-        # plane count is below the core count (CHILES has 61k planes on
-        # 128 cores -> salt 1; the inverse shape salts up)
-        spark = prepared.sparkSession
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        # 4x oversubscription of (plane, salt) combos vs partitions:
-        # plain hash placement is balls-in-bins, and combos == partitions
-        # leaves ~1/3 of cores idle on collisions
-        salt_n = max(1, -(-4 * p // max(1, int(n_planes))))
-        src = src.repartition(
-            p, chan, pol, F.pmod(F.xxhash64("_u_c", "_v_c"), F.lit(salt_n)))
-    partials = src.mapInPandas(grid_batches, out_schema)
+    partials = prepared.select(*cols).mapInPandas(grid_batches, out_schema)
     fin = (lambda c: F.sum(c) / F.lit(1.0e9)) if precise else F.sum
     return partials.groupBy(chan, pol, "u_idx", "v_idx").agg(
         fin(F.col("grid_re")).alias("grid_re"),

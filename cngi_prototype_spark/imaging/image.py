@@ -128,7 +128,6 @@ def image_from_grid(
 
 def image_planes_from_dense(
     partials_df: DataFrame,
-    sumw_df: DataFrame,
     gp: GridParms,
     *,
     image_size: tuple[int, int] | None = None,
@@ -142,7 +141,10 @@ def image_planes_from_dense(
     array. This is the cube-imaging fast path: no per-cell or per-pixel
     row explosion anywhere — partial grids shuffle as whole arrays and
     the written representation is the dense plane, exactly like the
-    reference's zarr image arrays (make_image.py:104-130)."""
+    reference's zarr image arrays (make_image.py:104-130). Each plane
+    normalizes by the sum of its partials' ``sum_w_norm`` (the
+    gridder's fused sum-of-weights), so there is no sumw join and the
+    visibilities are scanned once."""
     n_u, n_v = gp.n_u, gp.n_v
     crop = image_size or (n_u, n_v)
     schema = T.StructType([
@@ -150,23 +152,6 @@ def image_planes_from_dense(
         T.StructField(pol, T.IntegerType()),
         T.StructField(out, T.ArrayType(T.DoubleType())),
     ])
-    # dense fast path: partials that carry per-slab sum_w_norm (the
-    # gridder's fused sum-of-weights) normalize from their own rows —
-    # no broadcast join, and the standalone sum_weight branch never
-    # executes (it would re-scan the visibilities). An explicitly
-    # supplied sumw_df always wins: callers normalizing by a different
-    # weighting scheme pass one; make_image's planes path passes None.
-    embedded_sw = sumw_df is None and "sum_w_norm" in partials_df.columns
-    if embedded_sw:
-        joined = partials_df
-    else:
-        if sumw_df is None:
-            raise ValueError(
-                "image_planes_from_dense needs either a sumw_df or "
-                "partials carrying the fused sum_w_norm column")
-        joined = partials_df.join(F.broadcast(sumw_df), on=[chan, pol],
-                                  how="left")
-
     if correct_pswf:
         cu_full = pswf((np.arange(n_u) - n_u // 2) / (n_u // 2))[0]
         cv_full = pswf((np.arange(n_v) - n_v // 2) / (n_v // 2))[0]
@@ -185,10 +170,7 @@ def image_planes_from_dense(
         img = np.fft.fftshift(np.fft.ifft2(np.fft.ifftshift(g)))
         lo_u, lo_v = n_u // 2 - crop[0] // 2, n_v // 2 - crop[1] // 2
         img = img[lo_u:lo_u + crop[0], lo_v:lo_v + crop[1]].real * (n_u * n_v)
-        if embedded_sw:
-            sw = pdf["sum_w_norm"].sum()
-        else:
-            sw = pdf["sum_weight"].iloc[0]
+        sw = pdf["sum_w_norm"].sum()
         if sw is None or pd.isna(sw) or sw == 0:
             sw = 1.0
         img = img / sw
@@ -198,7 +180,7 @@ def image_planes_from_dense(
         return pd.DataFrame({chan: [key[0]], pol: [key[1]],
                              out: [img.ravel()]})
 
-    return joined.groupBy(chan, pol).applyInPandas(plane, schema)
+    return partials_df.groupBy(chan, pol).applyInPandas(plane, schema)
 
 
 def make_image(vis_df: DataFrame, gp: GridParms, *,
@@ -225,14 +207,10 @@ def make_image(vis_df: DataFrame, gp: GridParms, *,
     if output == "planes":
         if variant != "kernel":
             raise ValueError("output='planes' requires variant='kernel'")
-        partials, sumw = grid_visibilities(vis_df, gp, weight=weight,
-                                           variant=variant,
-                                           dense_planes=True, **cols)
-        # None → normalize from the fused per-slab sums when the dense
-        # path embedded them (single pass); the non-packed fallback has
-        # no embedded column, so hand it the standalone branch
-        sumw_arg = None if "sum_w_norm" in partials.columns else sumw
-        return image_planes_from_dense(partials, sumw_arg, gp,
+        partials, _ = grid_visibilities(vis_df, gp, weight=weight,
+                                        variant=variant,
+                                        dense_planes=True, **cols)
+        return image_planes_from_dense(partials, gp,
                                        image_size=image_size, out="image")
     fused = variant == "explode"
     grid, sumw = grid_visibilities(vis_df, gp, weight=weight,

@@ -582,12 +582,10 @@ def _estimated_corpus_rows(corpus: DataFrame) -> int:
     """Job-free corpus row estimate for LSH plan decisions (r15; the
     old ``corpus.count()`` cost a full pass over a derived corpus per
     plan build). The 64 B/row divisor deliberately OVER-estimates rows
-    (a real embedding row is ~520 B on disk), because over-estimation
-    is the safe direction everywhere this is consumed: the
-    ``max_bucket`` cap engages (correct for any corpus) and signature
-    vectorization turns on (value-identical to the fold route —
-    parity-tested). Falls back to an exact count only when Catalyst
-    stats are unreadable (py4j drift)."""
+    (a real embedding row is ~520 B on disk): over-estimation turns
+    signature vectorization on, which is value-identical to the fold
+    route (parity-tested). Falls back to an exact count only when
+    Catalyst stats are unreadable (py4j drift)."""
     from cngi_prototype_spark.plans.inspect import estimated_rows
 
     est = estimated_rows(corpus, bytes_per_row=64)
@@ -724,52 +722,30 @@ def cosine_pairs_lsh(
     pair-checked; surface them with
     :func:`cosine_lsh_skipped_vectors` (same arguments) so a dedup
     pipeline can distinguish "no near-dup found" from "not examined".
-    When the (estimated) corpus size is itself <= ``max_bucket`` the
-    cap cannot bind and its counting pass is skipped — an ``n_rows``
-    under-estimate below ``max_bucket`` therefore disables the cap.
+    ``n_rows`` (or, by default, a job-free Catalyst estimate) only
+    routes the signature computation (``_lsh_tag``); the cap holds for
+    every input.
     """
     import pandas as pd
 
-    # one size estimate serves both tier routing (inside _lsh_tag) and
-    # the can-the-cap-bind check below. r15: no more corpus.count()
-    # job at plan build — Catalyst's size estimate with a deliberately
-    # LOW bytes-per-row divisor OVER-estimates rows, and over-estimate
-    # is the safe direction for BOTH consumers: the cap-bind check
-    # engages the (always-correct) window guardrail, and the signature
-    # route flips to the vectorized path, which is value-identical to
-    # the fold path (parity-tested; a sign flip needs |dot| ~ 1e-15).
-    # An under-estimate could silently DISABLE the cap, which is why
-    # the divisor (64 B/row vs the real ~520 B/row of a 64-dim
-    # embedding row) errs high by ~8x.
-    n_corpus = int(n_rows) if n_rows is not None else _estimated_corpus_rows(corpus)
     tagged = _lsh_tag(corpus, id_col, vec_col, dim, num_bands,
-                      planes_per_band, seed, vectorize_above, n_corpus)
+                      planes_per_band, seed, vectorize_above, n_rows)
 
     # the size gate runs BEFORE collect_list (window count over the
     # same keys the groupBy shuffles on — one exchange, spillable sort,
     # no re-partition): filtering AFTER the agg would still build the
-    # over-cap bucket's array in a single reducer task. When the whole
-    # corpus fits under max_bucket the cap CANNOT bind, so the window
-    # pass (an extra within-partition sort) is skipped entirely.
-    if n_corpus > max_bucket:
-        src = tagged.withColumn(
-            "bucket_n",
-            F.count(F.lit(1)).over(Window.partitionBy("band", "sig"))
-        ).filter((F.col("bucket_n") > 1)
-                 & (F.col("bucket_n") <= max_bucket))
-        packed = (src.select("band", "sig",
-                             F.struct("vid", "uv").alias("s"))
-                  .groupBy("band", "sig")
-                  .agg(F.array_sort(F.collect_list("s")).alias("ss")))
-    else:
-        packed = (tagged.select("band", "sig",
-                                F.struct("vid", "uv").alias("s"))
-                  .groupBy("band", "sig")
-                  .agg(F.array_sort(F.collect_list("s")).alias("ss"))
-                  .filter(F.size("ss") > 1))
-    packed = packed.select(
-        F.transform("ss", lambda s: s["vid"]).alias("ids"),
-        F.flatten(F.transform("ss", lambda s: s["uv"])).alias("flat"))
+    # over-cap bucket's array in a single reducer task. The window runs
+    # for every input — no size estimate can switch the cap off.
+    sized = tagged.withColumn(
+        "bucket_n", F.count(F.lit(1)).over(Window.partitionBy("band", "sig")))
+    packed = (sized.filter((F.col("bucket_n") > 1)
+                           & (F.col("bucket_n") <= max_bucket))
+              .select("band", "sig", F.struct("vid", "uv").alias("s"))
+              .groupBy("band", "sig")
+              .agg(F.array_sort(F.collect_list("s")).alias("ss"))
+              .select(F.transform("ss", lambda s: s["vid"]).alias("ids"),
+                      F.flatten(F.transform("ss", lambda s: s["uv"]))
+                      .alias("flat")))
 
     import pyspark.sql.types as T
 
@@ -822,21 +798,11 @@ def cosine_lsh_skipped_vectors(
     emitted" is not silently read as "verified unique" (the SemDeDup
     ``cell_skipped`` convention, see :func:`semantic_dedup`).
 
-    Mirrors the pairs run's cap-bind check exactly: when the same
-    ``n_rows``-or-count estimate is <= ``max_bucket``,
-    :func:`cosine_pairs_lsh` disables the cap and scores EVERY bucket,
-    so nothing was skipped — this returns empty rather than flagging
-    over-cap buckets the pairs run actually examined (the two "same
-    arguments" calls must agree about what was checked). The default
-    estimate here is the same job-free Catalyst estimate the pairs run
-    uses (:func:`_estimated_corpus_rows`), so the two calls agree by
-    construction."""
-    n_corpus = int(n_rows) if n_rows is not None else _estimated_corpus_rows(corpus)
-    if n_corpus <= max_bucket:
-        return (corpus.sparkSession.createDataFrame(
-            [], "vec_id long, band int, sig string, bucket_n long"))
+    The pairs run applies its cap to every input, so this flags
+    exactly the buckets it skipped; ``n_rows`` only routes the
+    signature computation, as there."""
     tagged = _lsh_tag(corpus, id_col, vec_col, dim, num_bands,
-                      planes_per_band, seed, vectorize_above, n_corpus)
+                      planes_per_band, seed, vectorize_above, n_rows)
     return (tagged
             .withColumn("bucket_n", F.count(F.lit(1)).over(
                 Window.partitionBy("band", "sig")))

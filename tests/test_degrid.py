@@ -224,7 +224,7 @@ def test_slab_salt_map_bounds_group_size():
     """The probe splits (a) straggler groups past a core's fair share
     — npart-bounded — and (b) any group whose pandas frame would
     outgrow the byte budget, NOT npart-bounded."""
-    from cngi_prototype_spark.imaging.degrid import _slab_salt_map
+    from cngi_prototype_spark.imaging.grid import _slab_salt_map
 
     # fairness: 1 hot group among uniform cold ones
     cnts = [((0, 0, s), 100) for s in range(16)] + [((0, 0, 99), 3200)]

@@ -185,6 +185,92 @@ def test_dense_planes_subsalt_parity(spark):
     assert np.abs(g - gr).max() < 1e-9
 
 
+def test_pack_bits_widened_past_24_bits():
+    """The packed key's limits come from its 63-bit layout (one chan
+    bit at least, the widest slab int32-indexable), not a fixed
+    ``bu + bv <= 24``: an 8192 x 4096 grid packs, so does the largest
+    plane the FFT consumer holds with room for CHILES's 30 720
+    channels; oversampling past the du/dv byte does not."""
+    from cngi_prototype_spark.imaging.grid import _pack_bits
+
+    def gp(n_u, n_v, ov=100):
+        return GridParms(n_u=n_u, n_v=n_v, cell_u=2e-5, cell_v=2e-5,
+                         support=7, oversampling=ov)
+
+    assert _pack_bits(gp(8192, 4096)) == (13, 12)
+    bu, bv = _pack_bits(gp(16384, 16384))
+    assert 63 - (4 + bu + bv + 16) >= 15 and (1 << 15) > 30720
+    assert _pack_bits(gp(65536, 65536)) is None  # slab index past int32
+    assert _pack_bits(gp(64, 64, ov=254)) is not None
+    assert _pack_bits(gp(64, 64, ov=255)) is None
+
+
+def test_dense_planes_large_grid_parity(spark):
+    """A grid past the old 24-bit packing cap runs the packed
+    ``mapInArrow`` gridder and matches the explode variant's cells.
+    The vis sit near the grid's high u/v edges (chan 3, pol 1), so
+    every packed field uses its top bits."""
+    from cngi_prototype_spark.plans import explain_formatted
+
+    gp = GridParms(n_u=8192, n_v=4096, cell_u=2e-5, cell_v=2e-5,
+                   support=7, oversampling=100)
+    rng = np.random.default_rng(8)
+    n = 300
+    scale_u = -(1.0e9 * gp.cell_u * gp.n_u) / C_M_S
+    scale_v = -(1.0e9 * gp.cell_v * gp.n_v) / C_M_S
+    pdf = pd.DataFrame({
+        "u": (rng.uniform(7900, 8180, n) - gp.n_u // 2) / scale_u,
+        "v": (rng.uniform(10, 4080, n) - gp.n_v // 2) / scale_v,
+        "freq": np.full(n, 1.0e9),
+        "chan": np.full(n, 3, np.int32), "pol": np.full(n, 1, np.int32),
+        "data_re": rng.normal(size=n), "data_im": rng.normal(size=n),
+        "weight": rng.uniform(0.5, 2.0, n),
+    })
+    df = spark.createDataFrame(pdf).repartition(3)
+    fast, _ = grid_visibilities(df, gp, variant="kernel", n_planes=1,
+                                dense_planes=True)
+    assert "MapInArrow" in explain_formatted(fast)
+    fp = fast.toPandas()
+    assert set(zip(fp.chan, fp.pol)) == {(3, 1)}
+    rp = grid_visibilities(df, gp, variant="explode")[0].toPandas()
+    assert rp.u_idx.min() > 7800
+    # place the slabs (the loop of test_dense_planes_subsalt_parity)
+    # into the grid's top rows [ulo, n_u); nothing may land below
+    ulo = 7800
+    g = np.zeros((gp.n_u - ulo, gp.n_v), complex)
+    for r in fp.itertuples():
+        arr = (np.asarray(r.grid_re) + 1j * np.asarray(r.grid_im)
+               ).reshape(-1, gp.n_v)
+        u0 = int(r.u0)
+        a0, a1 = max(0, ulo - u0), min(len(arr), gp.n_u - u0)
+        assert not arr[:a0].any()
+        g[u0 + a0 - ulo:u0 + a1 - ulo] += arr[a0:a1]
+    gr = np.zeros_like(g)
+    gr[rp.u_idx - ulo, rp.v_idx] = rp.grid_re + 1j * rp.grid_im
+    assert np.abs(g - gr).max() < 1e-9
+
+
+def test_dense_planes_unpackable_raises_at_build(spark):
+    """Where the key can't pack (oversampling past the du/dv byte),
+    ``dense_planes=True`` fails at build — no Spark job — and points
+    at the sparse-cell output."""
+    from cngi_prototype_spark.plans.inspect import build_jobs
+
+    gp = GridParms(n_u=64, n_v=64, cell_u=2e-5, cell_v=2e-5,
+                   support=7, oversampling=255)
+    df = spark.createDataFrame(pd.DataFrame({
+        "u": [10.0], "v": [20.0], "freq": [1.0e9],
+        "chan": np.zeros(1, np.int32), "pol": np.zeros(1, np.int32),
+        "data_re": [1.0], "data_im": [0.0], "weight": [1.0]}))
+
+    def build():
+        with pytest.raises(ValueError, match="output='cells'"):
+            grid_visibilities(df, gp, variant="kernel", n_planes=1,
+                              dense_planes=True)
+
+    assert build_jobs(spark, build)[1] == 0
+
+
 def test_fused_sumw_matches_standalone(spark, vis_pdf):
     """r14: ``fuse_sumw=True`` replaces the standalone sum-of-weights
     pass with per-cell center-tap partials EMBEDDED in the grid rows

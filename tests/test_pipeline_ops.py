@@ -559,13 +559,16 @@ def test_lsh_max_bucket_caps_degenerate_cluster(spark):
     n_open = cosine_pairs_lsh(df, threshold=0.6, **kw_open).count()
     assert n_open == 1000 * 999 // 2 + 6
     assert cosine_lsh_skipped_vectors(df, **kw_open).count() == 0
-    # cap-bind parity: with an n_rows under-estimate <= max_bucket the
-    # PAIRS run disables the cap and scores every bucket — the skipped
-    # report must agree (empty), not flag buckets that were examined
+    # an n_rows under-estimate (<= max_bucket) only routes the
+    # signatures: the cap still holds, and the skipped report still
+    # flags the whole 1,000-vector cluster
     kw_under = dict(kw, n_rows=50)
-    n_under = cosine_pairs_lsh(df, threshold=0.6, **kw_under).count()
-    assert n_under == 1000 * 999 // 2 + 6  # cap bypassed
-    assert cosine_lsh_skipped_vectors(df, **kw_under).count() == 0
+    under = cosine_pairs_lsh(df, threshold=0.6, **kw_under).toPandas()
+    assert not ((under.id_a < 1000) & (under.id_b < 1000)).any()
+    assert ((under.id_a >= 2000) & (under.id_b >= 2000)).sum() == 6
+    skipped = cosine_lsh_skipped_vectors(df, **kw_under).toPandas()
+    assert set(skipped.vec_id) == set(range(1000))
+    assert (skipped.bucket_n == 1000).all()
 
 
 def test_tier_routing_n_rows_hint_skips_upstream_eval(spark):
@@ -663,11 +666,9 @@ def test_lsh_bucket_cap_prefilters_before_collect(spark):
     # not only a post-agg size() filter: Window in the capped plan
     assert "Window" in explain_formatted(capped)
 
-    # uncapped: the boilerplate bucket pairs come back, small pair kept.
-    # (Over a createDataFrame/ExistingRDD input the row estimate
-    # degrades to Long.Max, so the conservative window branch stays on
-    # regardless of max_bucket — the documented safe direction; the
-    # no-window skip on a parquet input is pinned in test_plan_shapes.)
+    # uncapped: the boilerplate bucket pairs come back, small pair kept
+    # (the window count runs for every max_bucket; test_plan_shapes
+    # pins it on a parquet input)
     uncapped = minhash_lsh_candidates(df, max_bucket=10**9)
     all_pairs = set(map(tuple,
                         uncapped.select("id_a", "id_b").collect()))

@@ -516,29 +516,21 @@ def test_minhash_lsh_candidates_one_corpus_shuffle(spark):
     collect_list pass — no two-sided self-join (the old plan derived
     the shingle+band subtree once per join side). Exactly one corpus
     scan; pair set identical to the join form by construction (one row
-    per (doc, band) per bucket). r15: when the corpus row ESTIMATE can
-    exceed max_bucket, a window count over the same keys pre-filters
-    buckets before collect_list (spillable guardrail; same single
-    exchange — the groupBy reuses the window's partitioning); a
-    max_bucket the estimate cannot reach keeps the window out."""
+    per (doc, band) per bucket). A window count over the same keys
+    pre-filters buckets before collect_list (spillable guardrail; same
+    single exchange — the groupBy reuses the window's partitioning)
+    for EVERY max_bucket: no size estimate switches it off."""
     from cngi_prototype_spark.dedup.dedup import minhash_lsh_candidates
     from cngi_prototype_spark.plans import explain_formatted
-    df = minhash_lsh_candidates(Q._docs(spark, SF), num_hashes=8,
-                                bands=4, shingle_n=3, max_bucket=10**9)
-    plan = explain_formatted(df)
-    assert len(read_schemas(df)) == 1
-    assert not re.search(r"\(\d+\) (Window|SortMergeJoin"
-                         r"|BroadcastHashJoin|ShuffledHashJoin)\b", plan)
-    # default max_bucket: the cap can bind at this corpus estimate, so
-    # the window guardrail appears — but still one scan and no join,
-    # and the window's keys match the groupBy (one corpus exchange)
-    dfg = minhash_lsh_candidates(Q._docs(spark, SF), num_hashes=8,
-                                 bands=4, shingle_n=3)
-    plang = explain_formatted(dfg)
-    assert len(read_schemas(dfg)) == 1
-    assert not re.search(r"\(\d+\) (SortMergeJoin"
-                         r"|BroadcastHashJoin|ShuffledHashJoin)\b", plang)
-    assert len(re.findall(r"hashpartitioning\(band", plang)) == 1
+    for kw in ({"max_bucket": 10**9}, {}):
+        df = minhash_lsh_candidates(Q._docs(spark, SF), num_hashes=8,
+                                    bands=4, shingle_n=3, **kw)
+        plan = explain_formatted(df)
+        assert len(read_schemas(df)) == 1
+        assert not re.search(r"\(\d+\) (SortMergeJoin"
+                             r"|BroadcastHashJoin|ShuffledHashJoin)\b", plan)
+        assert re.search(r"\(\d+\) Window\b", plan), kw
+        assert len(re.findall(r"hashpartitioning\(band", plan)) == 1
     # guardrail still bites: max_bucket=1 can emit no pairs
     few = minhash_lsh_candidates(Q._docs(spark, SF), num_hashes=8,
                                  bands=4, shingle_n=3, max_bucket=1)

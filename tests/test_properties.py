@@ -473,7 +473,7 @@ def test_slab_salt_map_invariants(counts, npart):
     (count/sub <= cap_rows), and no group larger than the fair-share
     trigger survives unsplit unless a single fair share already covers
     it."""
-    from cngi_prototype_spark.imaging.degrid import _slab_salt_map
+    from cngi_prototype_spark.imaging.grid import _slab_salt_map
 
     cap = 100_000
     cnts = [((0, 0, i), n) for i, n in enumerate(counts)]
