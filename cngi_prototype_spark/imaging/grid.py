@@ -462,6 +462,26 @@ def _pack_bits(gp: GridParms) -> tuple[int, int] | None:
     return bu, bv
 
 
+def _chan_pol_key(chan: str, pol: str, low_bits: int,
+                  what: str) -> tuple[Column, Column, Column]:
+    """High fields of a packed int64 key ``chan | pol (4) | low_bits``
+    and their id range, shared by the dense gridder and the imaging
+    weights read-back. Returns ``(prefix, ids_ok, overflow)``: the two
+    shifted fields, the per-row range test and a ``raise_error``
+    naming the bounds. pol has 4 bits and chan the rest below the sign
+    bit, at most 31; an out-of-range (or negative) id would silently
+    bleed into its neighboring field and alias another plane's cell."""
+    chan_max = (1 << min(64 - 1 - 4 - low_bits, 31)) - 1
+    ids_ok = ((F.col(pol) >= 0) & (F.col(pol) < 16)
+              & (F.col(chan) >= 0) & (F.col(chan) <= chan_max))
+    prefix = (F.shiftleft(F.col(chan).cast("long"), 4 + low_bits)
+              .bitwiseOR(F.shiftleft(F.col(pol).cast("long"), low_bits)))
+    overflow = F.raise_error(F.lit(
+        f"{what} packed key overflow: need 0 <= pol < 16 and "
+        f"0 <= chan <= {chan_max}"))
+    return prefix, ids_ok, overflow
+
+
 def _slab_salt_map(cnts: list[tuple[Hashable, int]], npart: int,
                    cap_rows: int = (64 << 20) // 56,
                    ) -> dict[Hashable, int]:
@@ -546,25 +566,16 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     shift_group = 16 + bv + slab_log  # (chan, pol, u_slab) id
     slab_mask = (1 << (bu - slab_log)) - 1  # slab_w <= 2^bu, so >= 0
 
-    # fail fast on ids the bit layout can't hold: pol has 4 bits, chan
-    # the remaining high bits; out-of-range (or negative) ids would
-    # silently bleed into the neighboring field and scatter data into
-    # the wrong plane (the explode/pandas paths have no such limit).
+    # fail fast on ids the bit layout can't hold (``_chan_pol_key``).
     # _u_c/_v_c are bounded by the in-bounds filter; du/dv by the
     # oversampling<=254 precondition of _pack_bits.
-    chan_bits = 64 - (4 + bu + bv + 16) - 1  # keep the sign bit clear
-    chan_max = (1 << min(chan_bits, 31)) - 1
-    ids_ok = ((F.col(pol) >= 0) & (F.col(pol) < 16)
-              & (F.col(chan) >= 0) & (F.col(chan) <= chan_max))
-    k = (F.shiftleft(F.col(chan).cast("long"), 4 + bu + bv + 16)
-         .bitwiseOR(F.shiftleft(F.col(pol).cast("long"), bu + bv + 16))
-         .bitwiseOR(F.shiftleft(F.col("_u_c").cast("long"), bv + 16))
+    k, ids_ok, overflow = _chan_pol_key(chan, pol, bu + bv + 16,
+                                        "dense gridder")
+    k = (k.bitwiseOR(F.shiftleft(F.col("_u_c").cast("long"), bv + 16))
          .bitwiseOR(F.shiftleft(F.col("_v_c").cast("long"), 16))
          .bitwiseOR(F.shiftleft((F.col("_du") + F.lit(128)).cast("long"), 8))
          .bitwiseOR((F.col("_dv") + F.lit(128)).cast("long")))
-    k = F.when(ids_ok, k).otherwise(F.raise_error(F.lit(
-        f"dense gridder packed key overflow: need 0 <= pol < 16 and "
-        f"0 <= chan <= {chan_max}")))
+    k = F.when(ids_ok, k).otherwise(overflow)
     # Fused sum-of-weights (wn_col = weight·norm_u·norm_v, the codegen
     # LUT expression from grid_visibilities): summed map-side inside the
     # SAME groupBy that builds the fat rows, so the separate full-scan

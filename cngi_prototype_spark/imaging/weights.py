@@ -18,13 +18,18 @@ Reference parity: ``make_imaging_weight``
 Spark-first shape: step 1 is a one-pass Hermitian explode + groupBy
 sum (map-side combine bounds the shuffle at touched-cells × partitions);
 step 2 is window sums over the grid (``Window.partitionBy(chan, pol)``:
-Σgrid_w and Σgrid_w²), so every grid row carries its plane's
-``(f1, f2)`` in the one broadcast; step 3 is a single left equi-join of
-the vis facts against that grid — broadcast when the grid is small
-(``n_u·n_v`` bounded), shuffle-hash on the cell key otherwise. The
-grid has one consumer, so nothing is checkpointed or cached and the
-builder launches no Spark job. No UDFs anywhere; the whole plan stays
-in whole-stage codegen.
+Σgrid_w and Σgrid_w²), so every grid row carries its own denominator
+``f1·grid_w + f2``; step 3 is a single left equi-join of the vis facts
+against that grid on ONE packed long, ``chan | pol | u_idx | v_idx``
+(the dense gridder's field order, ``grid._chan_pol_key``), so the
+grid row is just ``(key, denominator)`` and Spark builds a compact
+``LongHashedRelation`` — broadcast when the grid is small (``n_u·n_v``
+bounded), shuffle-hash on the key otherwise. The key needs
+``0 <= pol < 16`` and ``0 <= chan <= 2^min(59 - bu - bv, 31) - 1``
+(``bu``/``bv``: bits of ``n_u``/``n_v``); other ids raise, naming the
+bounds. The grid has one consumer, so nothing is checkpointed or
+cached and the builder launches no Spark job. No UDFs anywhere; the
+whole plan stays in whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -32,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from cngi_prototype_spark.imaging.grid import C_M_S, GridParms
+from cngi_prototype_spark.imaging.grid import C_M_S, GridParms, _chan_pol_key
 
 # grid side is broadcast when the padded uv-plane cell count is below this
 _BROADCAST_CELLS = 4_000_000
@@ -127,39 +132,51 @@ def make_imaging_weight(
     f1, f2 = _factors(weighting, robust, briggs_abs_noise,
                       F.sum("grid_w").over(plane),
                       F.sum(F.col("grid_w") * F.col("grid_w")).over(plane))
-    # alias the grid's key columns so the equi-join condition can't
-    # collapse onto the shared lineage (chan==chan would be trivially
-    # true and silently degrade to a cross join filter) — after the
-    # window, so its shuffle carries each key once; f1/f2 are literals
-    # for uniform/briggs_abs, so only briggs plans the window
+    # one long key, chan | pol | u_idx | v_idx, so Spark builds a
+    # LongHashedRelation (four int keys overflow its 8-byte packing and
+    # fall back to an UnsafeHashedRelation around a whole memory page).
+    # The grid row shrinks to (key, denominator): f1·grid_w + f2, null
+    # where grid_w is 0, formed after the window so its shuffle carries
+    # each cell once; f1/f2 are literals for uniform/briggs_abs, so
+    # only briggs plans the window. The grid key is never null (-1
+    # never matches a probe key): a nullable one lets Catalyst infer an
+    # isnotnull filter that lands below uniform's aggregate but not
+    # below briggs's window, and the two weightings' scatter shuffles
+    # stop being one reused exchange.
+    bu, bv = (max(1, (n - 1).bit_length()) for n in (gp.n_u, gp.n_v))
+    prefix, ids_ok, overflow = _chan_pol_key(chan, pol, bu + bv,
+                                             "imaging weight")
+
+    def cell_key(cu: Column, cv: Column) -> Column:
+        return (prefix.bitwiseOR(F.shiftleft(cu.cast("long"), bv))
+                .bitwiseOR(cv.cast("long")))
+
     g = (grid_weights(df, gp, u=u, v=v, freq=freq, weight=weight, chan=chan,
                       pol=pol)
-         .select(chan, pol, "u_idx", "v_idx", "grid_w",
-                 f1.alias("f1"), f2.alias("f2"))
-         .select(F.col(chan).alias("_gchan"), F.col(pol).alias("_gpol"),
-                 "u_idx", "v_idx", "grid_w", "f1", "f2"))
+         .select(F.coalesce(cell_key(F.col("u_idx"), F.col("v_idx")),
+                            F.lit(-1).cast("long")).alias("_gk"),
+                 F.when(F.col("grid_w") != 0, f1 * F.col("grid_w") + f2)
+                 .alias("_den")))
     if gp.n_u * gp.n_v <= _BROADCAST_CELLS:
         g = F.broadcast(g)
 
+    # the id range is checked on every vis row, which covers the grid:
+    # each grid row's (chan, pol) comes from a vis row. Out-of-bounds
+    # cells and null ids get a null key and keep their weight.
     cu, cv, _, _ = _cell_cols(gp, F.col(u), F.col(v), F.col(freq))
     vis = df.withColumn("_cu", cu).withColumn("_cv", cv)
-    joined = (
-        vis.join(g, on=[F.col(chan) == F.col("_gchan"),
-                        F.col(pol) == F.col("_gpol"),
-                        F.col("_cu") == F.col("u_idx"),
-                        F.col("_cv") == F.col("v_idx")],
-                 how="left")
-        .drop("_gchan", "_gpol", "u_idx", "v_idx")
-    )
-    # degrid read-back (SG:530-546): empty/NaN sample or cell -> weight;
-    # f1/f2 are null exactly where grid_w is, so they are never read
-    # outside a matched cell
+    vk = (F.when(~ids_ok, overflow)
+          .when(_in_bounds(gp, F.col("_cu"), F.col("_cv")),
+                cell_key(F.col("_cu"), F.col("_cv"))))
+    joined = vis.withColumn("_k", vk).join(
+        g, F.col("_k") == F.col("_gk"), how="left")
+    # degrid read-back (SG:530-546): empty/NaN sample or empty cell ->
+    # weight; _den is null outside a matched, nonzero cell
     usable = (F.col(weight).isNotNull() & (F.col(weight) != 0)
-              & F.col("grid_w").isNotNull() & (F.col("grid_w") != 0)
-              & _in_bounds(gp, F.col("_cu"), F.col("_cv")))
-    iw = F.when(usable, F.col(weight) / (F.col("f1") * F.col("grid_w") + F.col("f2"))) \
-          .otherwise(F.col(weight))
-    return joined.withColumn(out, iw).drop("_cu", "_cv", "grid_w", "f1", "f2")
+              & F.col("_den").isNotNull())
+    iw = F.when(usable, F.col(weight) / F.col("_den")).otherwise(F.col(weight))
+    return (joined.withColumn(out, iw)
+            .drop("_cu", "_cv", "_k", "_gk", "_den"))
 
 
 # ---------------------------------------------------------------------------

@@ -28,6 +28,20 @@ broadcast-hint count, pushed-filter strings, per-scan read widths, and
 schema reads included), so "builders launch no undeclared jobs" reads
 off the committed report.
 
+``build_jobs`` is exact only at zero. A builder that runs an eager
+action (a ``localCheckpoint``, a ``count``) runs it through adaptive
+execution, where every query stage is its own job, and AQE re-plans
+as stages complete, so the same plan can split into a different
+number of stages from run to run. ``dedup_minhash_verified``, built
+alone in a fresh session, recorded 10 jobs in four runs and 11 in
+two: the eager ``localCheckpoint`` of ``duplicate_clusters``' edge
+list ran one extra 1-task shuffle stage and then 16 uncoalesced
+partitions instead of 2. Built after every earlier registry query
+it recorded 11 twice, so query order is not the cause, and the
+schema reads do not vary (one job per ``spark.read.parquet``; nothing
+caches them across queries). A ±1 ``build_jobs`` difference on a
+builder with eager actions is scheduling, not a builder change.
+
 Run the full audit with ``python tools/plan_audit.py`` (writes
 ``PLAN_AUDIT.json``); tests/test_plan_audit.py gates a representative
 subset in CI.

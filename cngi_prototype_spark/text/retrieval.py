@@ -168,6 +168,17 @@ def bm25_topk(
     convention included), same exact-integer tf/df/N/Σdl, same
     contribution expression. The store path
     (:func:`bm25_score_postings` over a postings table) is unchanged.
+
+    Recovery trade of the two ``localCheckpoint``s: their blocks sit in
+    the executors' block managers, not in reliable storage, and the
+    lineage above them is cut, so losing an executor that holds one
+    fails the job that reads it instead of recomputing it. The staged
+    table is narrow and the corpus pass is the query's dominant cost,
+    so rerunning the whole query on such a loss is accepted over
+    paying that pass once per consumer. The blocks are not unpersisted
+    here: the returned frame is lazy and reads them each time it runs.
+    They live as long as it (or a frame built on it) is referenced;
+    Spark's context cleaner drops them once the driver collects it.
     """
     spark = docs.sparkSession
     qrows = _query_terms(queries)

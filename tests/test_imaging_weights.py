@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -114,3 +116,121 @@ def test_unknown_weighting_raises_before_building(spark, vis_pdf):
             make_imaging_weight(df, GP, weighting="bogus")
 
     assert build_jobs(spark, build)[1] == 0
+
+
+def _join_keys_and_broadcast_bytes(spark, df):
+    """Execute ``df``; return its executed joins' ``(left, right)`` key
+    lists and the BroadcastExchange ``data size`` SQL metrics, in
+    bytes, of that execution."""
+    from cngi_prototype_spark.plans import explain_formatted
+
+    df.collect()
+    plan = explain_formatted(df)
+    joins = re.findall(r"Left keys \[\d+\]: \[([^\]]*)\]\nRight keys \[\d+\]: "
+                       r"\[([^\]]*)\]", plan)
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    eid = max(execs.apply(i).executionId() for i in range(execs.size()))
+    values = store.executionMetrics(eid)
+    nodes = store.planGraph(eid).allNodes()
+    unit = {"B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30}
+    sizes = []
+    for k in range(nodes.size()):
+        node = nodes.apply(k)
+        if not node.name().startswith("BroadcastExchange"):
+            continue
+        ms = node.metrics()
+        for j in range(ms.size()):
+            if ms.apply(j).name() == "data size":
+                num, u = values.get(ms.apply(j).accumulatorId()).get().split()
+                sizes.append(float(num.replace(",", "")) * unit[u])
+    return [(a.split(", "), b.split(", ")) for a, b in joins], sizes
+
+
+def _assert_one_long_key(joins):
+    """Every join keys on one LongType attribute (``name#idL``)."""
+    assert joins
+    for left, right in joins:
+        assert len(left) == len(right) == 1, (left, right)
+        assert re.fullmatch(r"\w+#\d+L", left[0]), left
+        assert re.fullmatch(r"\w+#\d+L", right[0]), right
+
+
+def test_weights_read_back_joins_on_one_long_key(spark, vis_pdf):
+    """The degrid read-back joins on one packed long, so the broadcast
+    grid is a LongHashedRelation:
+    four int keys build an UnsafeHashedRelation around a whole 64 MiB
+    memory page even for a few hundred grid rows."""
+    df = spark.createDataFrame(vis_pdf).repartition(4)
+    joins, sizes = _join_keys_and_broadcast_bytes(
+        spark, make_imaging_weight(df, GP, weighting="briggs", robust=0.5))
+    _assert_one_long_key(joins)
+    assert sizes and max(sizes) < 16 << 20, sizes
+
+
+@pytest.mark.parametrize("col,value", [("pol", 16), ("chan", -1)])
+def test_ids_outside_the_packed_key_raise(spark, vis_pdf, col, value):
+    from pyspark.errors import PySparkException
+
+    pdf = vis_pdf.copy()
+    pdf.loc[7, col] = value
+    df = spark.createDataFrame(pdf)
+    out = make_imaging_weight(df, GP, weighting="uniform")
+    with pytest.raises(PySparkException,
+                       match=r"need 0 <= pol < 16 and 0 <= chan <= 2147483647"):
+        out.collect()
+
+
+def test_null_ids_and_off_grid_cells_keep_their_weight(spark, vis_pdf):
+    pdf = vis_pdf.head(40).astype({"chan": "Int32", "pol": "Int32"})
+    pdf.loc[1, "chan"] = pd.NA
+    pdf.loc[2, "pol"] = pd.NA
+    pdf.loc[4, ["u", "v"]] = 20000.0  # both arms far off the 32-cell grid
+    got = (make_imaging_weight(spark.createDataFrame(pdf), GP,
+                               weighting="uniform")
+           .select("rid", "imaging_weight").toPandas()
+           .set_index("rid")["imaging_weight"])
+    for rid in (1, 2, 4):
+        assert got[rid] == pdf.loc[rid, "weight"]
+    rest = pdf.drop(index=[1, 2]).astype({"chan": np.int32, "pol": np.int32})
+    np.testing.assert_allclose(got[rest["rid"]].to_numpy(),
+                               numpy_imaging_weight(rest, GP, "uniform", 0.0),
+                               rtol=1e-12)
+
+
+def test_imaging_weight_shuffle_branch_matches_spec(spark):
+    """A grid above ``_BROADCAST_CELLS`` is not broadcast-hinted. With
+    Spark's own size-based broadcast off (this input is tiny), the
+    read-back is a shuffled join on the one packed long and matches
+    the numpy spec."""
+    from cngi_prototype_spark.imaging.weights import _BROADCAST_CELLS
+
+    gp = GridParms(n_u=4096, n_v=2048, cell_u=2.0e-5, cell_v=2.0e-5,
+                   support=1, oversampling=0)
+    assert gp.n_u * gp.n_v > _BROADCAST_CELLS
+    rng = np.random.default_rng(5)
+    n = 300
+    pdf = pd.DataFrame({
+        "rid": np.arange(n),
+        "u": rng.uniform(-30, 30, n),
+        "v": rng.uniform(-30, 30, n),
+        "freq": np.full(n, 1.0e9),
+        "chan": rng.integers(0, 2, n).astype(np.int32),
+        "pol": np.zeros(n, np.int32),
+        "weight": rng.integers(1, 6, n).astype(np.float64),
+    })
+    df = spark.createDataFrame(pdf).repartition(4)
+    out = make_imaging_weight(df, gp, weighting="briggs", robust=0.5)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        joins, sizes = _join_keys_and_broadcast_bytes(spark, out)
+        got = (out.select("rid", "imaging_weight").toPandas()
+               .sort_values("rid"))
+    finally:
+        spark.conf.set(key, prev)
+    assert not sizes  # no BroadcastExchange: a shuffled join
+    _assert_one_long_key(joins)
+    exp = numpy_imaging_weight(pdf, gp, "briggs", 0.5)
+    np.testing.assert_allclose(got["imaging_weight"].to_numpy(), exp, rtol=1e-12)
