@@ -2008,7 +2008,7 @@ def ann_ivfpq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank width (recall@5 at 600k vectors: 0.14 vs 0.04 raw ADC,
     0.48 vs 0.22 at R=50) at equal-or-lower latency, so the
     production codebook is 16x32 and the contract floor is 0.30
-    (bench.py ANN_CONTRACT_FLOORS)."""
+    (tools/ladder.py ANN_CONTRACT_FLOORS)."""
     emb = _t(spark, sf_dir, "embeddings")
     if sf_dir not in _IVFPQ_PROD:
         _IVFPQ_PROD[sf_dir] = train_ivfpq(emb, n_cells=8, m=16, ksub=32)

@@ -504,8 +504,8 @@ def test_imaging_weights_single_grid_build_per_weighting(spark):
 
     _, last = _executed_parquet_scans(spark, -1)
     with Q._events_source(spark.read.parquet(f"{SF}/events.parquet")):
-        df, jobs = build_jobs(spark, lambda: bench.BENCH_OVERRIDES[
-            "imaging_weights"](spark, SF))
+        df, jobs = build_jobs(spark, lambda: bench.entry(
+            "imaging_weights")(spark, SF))
     assert jobs == 0
     df.collect()
     assert _executed_parquet_scans(spark, last)[0] == 3

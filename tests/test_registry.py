@@ -6,6 +6,8 @@ high-value compositions listed first after the hashed window)."""
 
 from __future__ import annotations
 
+import pytest
+
 from cngi_prototype_spark import queries as Q
 
 
@@ -28,12 +30,25 @@ def test_oracled_gates_fit_driver_window():
 
 
 def test_bench_queries_resolve():
+    """Every name the bench and the ladder tool time resolves to a
+    builder; a name that resolves to nothing raises KeyError."""
+    import importlib.util
+    import os
+
     import bench
 
-    qs = Q.queries()
-    for name in bench.BENCH_QUERIES:
-        assert (name in bench.BENCH_OVERRIDES or name in qs
-                or hasattr(Q, f"{name}_q")), name
+    for name in bench.BENCH_QUERIES + ["imaging_major_cycle"]:
+        assert callable(bench.entry(name)), name
+    with pytest.raises(KeyError):
+        bench.entry("no_such_query")
+
+    path = os.path.join(os.path.dirname(os.path.abspath(bench.__file__)),
+                        "tools", "ladder.py")
+    spec = importlib.util.spec_from_file_location("ladder", path)
+    ladder = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(ladder)
+    for name in ladder.LADDER_QUERIES + ladder.LADDER100_QUERIES:
+        assert callable(ladder._entry(name)), name
 
 
 def test_get_framework_client_returns_active_session(spark):
@@ -85,3 +100,35 @@ def test_interleaved_runs_settle_criterion(monkeypatch):
                     4.0, 2.0] + [6.0, 2.0] * 6 + [9.9] * 8
     u, s = bench._interleaved_runs(None, None, extra=6)
     assert len(u) == 12  # base 6 + extra 6, hard stop
+
+
+def test_timed_min_steal_guard(monkeypatch):
+    """_timed_min: min of `runs` walls, every wall recorded; a >2x
+    spread buys exactly two extra runs, never more."""
+    import bench
+
+    clock = [0.0]
+    durations: list[float] = []
+
+    def fake_run(df):
+        clock[0] += durations.pop(0)
+
+    monkeypatch.setattr(bench, "_run", fake_run)
+    monkeypatch.setattr(bench.time, "time", lambda: clock[0])
+
+    # calm window (spread exactly 2x): min-of-N, no extra run
+    durations[:] = [1.5, 1.0, 2.0, 9.9]
+    rs: list[float] = []
+    assert bench._timed_min(lambda: None, runs=3, rs=rs) == 1.0
+    assert rs == [1.5, 1.0, 2.0] and durations == [9.9]
+
+    # a 2.5x spread takes two extra runs, and the min comes from them
+    durations[:] = [1.0, 2.5, 4.0, 0.9, 9.9, 9.9]
+    rs = []
+    assert bench._timed_min(lambda: None, runs=2, rs=rs) == 0.9
+    assert rs == [1.0, 2.5, 4.0, 0.9] and durations == [9.9, 9.9]
+
+    # one run has no spread
+    durations[:] = [2.5]
+    assert bench._timed_min(lambda: None, runs=1) == 2.5
+    assert durations == []

@@ -2,8 +2,8 @@
 """Snapshot ``explain("formatted")`` for every bench query.
 
 Writes ``plans/<tag>/<query>_<suffix>.txt`` for each entry the bench
-times (BENCH_QUERIES with BENCH_OVERRIDES applied, plus
-imaging_major_cycle), under the same session shape bench.py uses
+times (BENCH_QUERIES plus imaging_major_cycle, each resolved by
+``bench.entry``), under the same session shape bench.py uses
 (PRECISE off, shuffle_partitions = cpus). The optimization rounds
 commit these as the before/after plan evidence next to the measured
 seconds.
@@ -40,20 +40,14 @@ def main() -> int:
         cores=cpus, app_name=f"capture_plans_{tag}",
         shuffle_partitions=cpus,
         extra_conf={"spark.driver.extraJavaOptions": "-Xlog:disable"})
-    qs = Q.queries()
-    names = list(bench.BENCH_QUERIES) + ["imaging_major_cycle"]
+    names = bench.BENCH_QUERIES + ["imaging_major_cycle"]
     rc = 0
     for name in names:
         if only is not None and name not in only:
             continue
-        fn = (bench.major_cycle if name == "imaging_major_cycle"
-              else bench.BENCH_OVERRIDES.get(name) or qs.get(name)
-              or getattr(Q, f"{name}_q", None))
-        if fn is None:
-            continue
         try:
             spark.sparkContext.setJobDescription(f"plan: {name}")
-            plan = explain_formatted(fn(spark, sf_dir))
+            plan = explain_formatted(bench.entry(name)(spark, sf_dir))
             with open(os.path.join(out_dir, f"{name}_{suffix}.txt"),
                       "w") as fh:
                 fh.write(plan)

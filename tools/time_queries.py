@@ -12,7 +12,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,29 +32,18 @@ def main() -> int:
         extra_conf={"spark.driver.extraJavaOptions": "-Xlog:disable",
                     "spark.ui.retainedStages": "100000"})
     bench._run(spark.read.parquet(f"{sf_dir}/region.parquet"))
-    qs = Q.queries()
     out: dict[str, dict] = {}
     for name in names or bench.BENCH_QUERIES:
-        fn = (bench.major_cycle if name == "imaging_major_cycle"
-              else bench.BENCH_OVERRIDES.get(name) or qs.get(name)
-              or getattr(Q, f"{name}_q", None))
-        if fn is None:
+        try:
+            fn = bench.entry(name)
+        except KeyError:
             print(f"skip {name}", file=sys.stderr)
             continue
         spark.sparkContext.setJobDescription(name)
         bench._run(fn(spark, sf_dir))  # codegen/JIT warm
         rs: list[float] = []
         s0 = shuffle_totals(spark)
-        for _ in range(runs):
-            t0 = time.time()
-            bench._run(fn(spark, sf_dir))
-            rs.append(round(time.time() - t0, 3))
-        for _ in range(2):
-            if min(rs) <= 0 or max(rs) / min(rs) <= 2.0:
-                break
-            t0 = time.time()
-            bench._run(fn(spark, sf_dir))
-            rs.append(round(time.time() - t0, 3))
+        bench._timed_min(fn, spark, sf_dir, runs=runs, rs=rs)
         s1 = shuffle_totals(spark)
         mb = (round(max(0, s1["write"] - s0["write"]) / len(rs) / 2**20, 2)
               if s0 and s1 else None)
