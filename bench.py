@@ -367,6 +367,34 @@ def _timed_min(fn, *args, runs: int,
     return min(walls)
 
 
+WARM_RUNS = 1  # untimed runs of each query before its timed ones
+
+
+def _time_tier(spark, sf_dir: str, names: list[str], runs: int):
+    """Times each query in `names`: WARM_RUNS untimed runs (codegen,
+    broadcast and file-listing warm-up of that query's own plan), then
+    `_timed_min` over `runs`. Returns (timings, query_runs, errors);
+    query_runs holds the timed walls only.
+
+    A single failing query must never cost the whole artifact (round 8
+    shipped NO bench json because one tier crashed the process): its
+    error is recorded and the tier keeps going."""
+    timings: dict[str, float] = {}
+    query_runs: dict[str, list[float]] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        rs: list[float] = []
+        try:
+            fn = entry(name)
+            for _ in range(WARM_RUNS):
+                _run(fn(spark, sf_dir))
+            timings[name] = _timed_min(fn, spark, sf_dir, runs=runs, rs=rs)
+            query_runs[name] = rs
+        except Exception as e:
+            errors[name] = f"{type(e).__name__}: {e}"[:200]
+    return timings, query_runs, errors
+
+
 def main() -> None:
     Q.PRECISE = False
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -380,7 +408,6 @@ def main() -> None:
     # JVM/codegen warmup on a trivial plan so q1 doesn't pay startup cost
     _run(spark.read.parquet(f"{sf_dir}/region.parquet"))
 
-    timings: dict[str, float] = {}
     # Per-query noise insurance (round-5 finding: single-shot timings in
     # the shared session are host-steal-dominated — four queries recorded
     # 1.5-2.2x "regressions" with zero code changes, while fresh min-of-3
@@ -393,20 +420,8 @@ def main() -> None:
     # CHILES tier already has. All runs land in BENCH_DETAIL's
     # query_runs for adjudication.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    query_runs: dict[str, list[float]] = {}
-
-    # a single failing query must never cost the whole artifact (round
-    # 8 shipped NO bench json because one tier crashed the process):
-    # record the error and keep going — the final line always prints.
-    errors: dict[str, str] = {}
-    for name in BENCH_QUERIES + ["imaging_major_cycle"]:
-        rs: list[float] = []
-        try:
-            timings[name] = _timed_min(entry(name), spark, sf_dir,
-                                       runs=runs, rs=rs)
-            query_runs[name] = rs
-        except Exception as e:
-            errors[name] = f"{type(e).__name__}: {e}"[:200]
+    timings, query_runs, errors = _time_tier(
+        spark, sf_dir, BENCH_QUERIES + ["imaging_major_cycle"], runs)
 
     # Self-adjudication (round-12): every round so far that showed a
     # query >1.5x over its committed-history min under a disturbed
@@ -474,6 +489,10 @@ def main() -> None:
         "q1_rerun_end_sec": q1_end,
         "q1_drift": round(q1_end / q1_last, 3) if q1_last else None,
         "runs_per_query": runs,
+        # untimed runs per query before its timed ones; older
+        # BENCH_DETAIL files lack the key: there the first timed run
+        # also paid the query's own warm-up
+        "warm_runs": WARM_RUNS,
         # how many queries tripped the per-query steal guard (>2x
         # spread -> extra runs); their full run lists are in query_runs
         "steal_guard_hits": sum(1 for rs in query_runs.values()

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cngi_prototype_spark.functions import exact
+from cngi_prototype_spark.functions.lits import local_frame
 from cngi_prototype_spark.schema import DEFAULT_VIS, VisSchema
 
 
@@ -146,8 +147,9 @@ def _distributed_time_rank(dt: DataFrame, time_col: str,
     ``max_bucket_rows`` second-level splits by value inside its own
     probed [min, max] (the probe already aggregates them alongside the
     counts; distinct values mean the span is positive whenever n > 1).
-    The mapping rides a small broadcast join, never an inline CASE
-    chain, and the offsets arithmetic reruns over the refined buckets.
+    The mapping rides a small broadcast join against a ``LocalRelation``
+    (never an inline CASE chain), and the offsets arithmetic reruns
+    over the refined buckets.
     ``keep_bucket=True`` retains the final ``__vb`` column (tests
     assert the per-bucket bound through it)."""
     spark = dt.sparkSession
@@ -175,8 +177,9 @@ def _distributed_time_rank(dt: DataFrame, time_col: str,
             k = ks.get(b, 1)
             rows.append((b, k, base2, mn, (mx - mn) / k if k > 1 else 1.0))
             base2 += k
-        m = F.broadcast(spark.createDataFrame(
-            rows, "__vb int, __k int, __b2 int, __mn double, __w double"))
+        m = F.broadcast(local_frame(
+            spark, rows,
+            "__vb int, __k int, __b2 int, __mn double, __w double"))
         sub = F.when(
             F.col("__k") > 1,
             F.least(F.col("__k") - 1,

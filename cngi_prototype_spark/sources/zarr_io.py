@@ -21,11 +21,11 @@ Scale design. The unit of parallelism is the ZARR CHUNK — exactly the
 dask layout the reference relies on, re-expressed for Spark:
 
 - **read**: the driver reads ONE consolidated ``.zmetadata`` blob,
-  builds the chunk-grid manifest of the anchor variable, parallelizes
-  it, and each task decodes only its chunk region of every variable
-  into Arrow batches (``mapInPandas``). No data moves through the
-  driver; tasks scale with the chunk count; codecs are stdlib (or
-  numcodecs when present — see zarr_store.py).
+  lists the anchor variable's chunk grid as a ``spark.range`` manifest
+  (one row per chunk), and each task decodes only its chunk region of
+  every variable into Arrow batches (``mapInPandas``). No data moves
+  through the driver; tasks scale with the chunk count; codecs are
+  stdlib (or numcodecs when present — see zarr_store.py).
 - **write**: one aggregate collects every dim's sorted coordinates
   (metadata-sized; timestamps as ``unix_micros`` longs, so no value
   passes through a local-time datetime). Rows are grouped by the
@@ -34,9 +34,13 @@ dask layout the reference relies on, re-expressed for Spark:
   group finds its rows' dense indices in the coordinates inside the
   write task, then writes its OWN chunk files (group ↔ chunk
   bijection: no write conflicts, no driver funnel). The input is
-  evaluated once for the coordinates and once per write job.
+  evaluated once: the coordinate aggregate fills a cache of it that
+  every write job reads, released before the call returns or raises.
   Variables over a dim subset (e.g. per-(time, baseline) scalars) are
   reduced first and written by their own job on their own chunk grid.
+  Metadata tables (the read manifest, a chunked dim's key → chunk
+  lookup) are built in the JVM, so only chunk encode and decode run in
+  Python workers.
   The driver writes only metadata + 1-D coords, then
   consolidates. Store paths may live on a shared filesystem (local
   mode, NFS) or an object store: URL-scheme paths ("s3://bucket/...")
@@ -50,16 +54,19 @@ dask layout the reference relies on, re-expressed for Spark:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass
 from typing import Any, Iterator
 
 import numpy as np
 import pandas as pd
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cngi_prototype_spark.functions.lits import local_frame
 from cngi_prototype_spark.sources import zarr_store as zs
 
 DIM_ATTR = "_ARRAY_DIMENSIONS"
@@ -84,6 +91,22 @@ def _keyed(df: DataFrame, dims) -> DataFrame:
     ts = {f.name: F.unix_micros(f.name) for f in df.schema.fields
           if f.name in dims and isinstance(f.dataType, T.TimestampType)}
     return df.withColumns(ts)
+
+
+@contextmanager
+def _cached(df: DataFrame) -> Iterator[DataFrame]:
+    """``df`` persisted (``MEMORY_AND_DISK``) for the ``with`` block and
+    released, blocking, when it exits or raises: the first action fills
+    the cache and later ones read it. A plan the caller cached already
+    is used as is and stays cached."""
+    if df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    finally:
+        df.unpersist(blocking=True)
 
 
 def _coord_keys(coord: np.ndarray) -> np.ndarray:
@@ -125,55 +148,57 @@ def write_zarr_xds(
     fs = zs.filesystem_for(store)
     gpath = os.path.join(store, group)
 
-    # ---- coords: every dim's sorted keys in ONE aggregate
-    # (metadata-sized collect)
-    keyed = _keyed(df, dim_cols)
-    got = keyed.agg(
-        *[F.array_sort(F.collect_set(d)).alias(d) for d in dim_cols],
-        *[F.count_if(F.col(d).isNull()).alias(f"__{d}_nulls")
-          for d in dim_cols]).collect()[0]
-    nulls = [d for d in dim_cols if got[f"__{d}_nulls"]]
-    if nulls:
-        raise ValueError(
-            f"write_zarr_xds: dims {nulls} hold null values — every row "
-            "needs a coordinate on every dim")
-    keys = {d: np.asarray(got[d]) for d in dim_cols}
-    coords = {d: _stored_coord(keys[d], df.schema[d].dataType)
-              for d in dim_cols}
-    shape = {d: len(keys[d]) for d in dim_cols}
-    empty = [d for d in dim_cols if shape[d] == 0]
-    if empty:
-        raise ValueError(
-            f"write_zarr_xds: no rows — dims {empty} have no "
-            "coordinate values (empty input DataFrame?)")
-    chunk_of = {d: min(chunks.get(d, shape[d]) or shape[d],
-                       max(shape[d], 1)) for d in dim_cols}
+    # the input is evaluated once: the coordinate aggregate fills the
+    # cache, every write job reads it, and no block outlives the call
+    with _cached(_keyed(df, dim_cols)) as keyed:
+        # ---- coords: every dim's sorted keys in ONE aggregate
+        # (metadata-sized collect)
+        got = keyed.agg(
+            *[F.array_sort(F.collect_set(d)).alias(d) for d in dim_cols],
+            *[F.count_if(F.col(d).isNull()).alias(f"__{d}_nulls")
+              for d in dim_cols]).collect()[0]
+        nulls = [d for d in dim_cols if got[f"__{d}_nulls"]]
+        if nulls:
+            raise ValueError(
+                f"write_zarr_xds: dims {nulls} hold null values — every row "
+                "needs a coordinate on every dim")
+        keys = {d: np.asarray(got[d]) for d in dim_cols}
+        coords = {d: _stored_coord(keys[d], df.schema[d].dataType)
+                  for d in dim_cols}
+        shape = {d: len(keys[d]) for d in dim_cols}
+        empty = [d for d in dim_cols if shape[d] == 0]
+        if empty:
+            raise ValueError(
+                f"write_zarr_xds: no rows — dims {empty} have no "
+                "coordinate values (empty input DataFrame?)")
+        chunk_of = {d: min(chunks.get(d, shape[d]) or shape[d],
+                           max(shape[d], 1)) for d in dim_cols}
 
-    # ---- metadata first: group, coord arrays, var arrays (executors
-    # then only ever write chunk files)
-    if not fs.exists(os.path.join(store, ".zgroup")):
-        zs.create_group(store, fs=fs)
-    zs.create_group(gpath, attrs=dict(attrs or {}), fs=fs)
-    for d in dim_cols:
-        ca = zs.ZarrArray.create(
-            os.path.join(gpath, d), (shape[d],),
-            (max(shape[d], 1),), coords[d].dtype,
-            compressor=compressor, attrs={DIM_ATTR: [d]}, fs=fs)
-        ca.write_full(coords[d])
-    arrays: dict[str, zs.ZarrArray] = {}
-    for v in var_specs:
-        arrays[v.name] = zs.ZarrArray.create(
-            os.path.join(gpath, v.name),
-            tuple(shape[d] for d in v.dims),
-            tuple(chunk_of[d] for d in v.dims),
-            v.dtype, compressor=compressor, fill_value=v.fill,
-            attrs={DIM_ATTR: list(v.dims)}, fs=fs)
+        # ---- metadata first: group, coord arrays, var arrays (executors
+        # then only ever write chunk files)
+        if not fs.exists(os.path.join(store, ".zgroup")):
+            zs.create_group(store, fs=fs)
+        zs.create_group(gpath, attrs=dict(attrs or {}), fs=fs)
+        for d in dim_cols:
+            ca = zs.ZarrArray.create(
+                os.path.join(gpath, d), (shape[d],),
+                (max(shape[d], 1),), coords[d].dtype,
+                compressor=compressor, attrs={DIM_ATTR: [d]}, fs=fs)
+            ca.write_full(coords[d])
+        arrays: dict[str, zs.ZarrArray] = {}
+        for v in var_specs:
+            arrays[v.name] = zs.ZarrArray.create(
+                os.path.join(gpath, v.name),
+                tuple(shape[d] for d in v.dims),
+                tuple(chunk_of[d] for d in v.dims),
+                v.dtype, compressor=compressor, fill_value=v.fill,
+                attrs={DIM_ATTR: list(v.dims)}, fs=fs)
 
-    rows = _write_vars(
-        keyed, arrays, var_specs, tuple(dim_cols), keys, chunk_of,
-        miss="write rows carry {d} values missing from the coordinates "
-             "collected from the same input — the input must be "
-             "deterministic")
+        rows = _write_vars(
+            keyed, arrays, var_specs, tuple(dim_cols), keys, chunk_of,
+            miss="write rows carry {d} values missing from the coordinates "
+                 "collected from the same input — the input must be "
+                 "deterministic")
     if consolidate:
         zs.consolidate_metadata(store, fs=fs)
     return {"shape": shape, "chunks": chunk_of,
@@ -214,10 +239,11 @@ def _write_var_chunks(sub: DataFrame, arrays: list[zs.ZarrArray],
     exactly its own chunk files.
 
     A dim held in one chunk has chunk key 0. A chunked dim gets its
-    chunk key from a LEFT broadcast join against a (key → chunk) table,
-    so a key outside ``keys`` still reaches a task — in the null-key
-    group — and raises ``miss`` (formatted with ``d``) there, as it does
-    on any dim."""
+    chunk key from a LEFT broadcast join against a (key → chunk)
+    ``LocalRelation`` (no Python stage re-serializes it), so a key
+    outside ``keys`` still reaches a task — in the null-key group — and
+    raises ``miss`` (formatted with ``d``) there, as it does on any
+    dim."""
     spark = sub.sparkSession
     g = sub.select(*dims, *[c for v in specs for c in v.cols])
     for d in dims:
@@ -225,7 +251,8 @@ def _write_var_chunks(sub: DataFrame, arrays: list[zs.ZarrArray],
         if chunk_of[d] >= len(keys[d]):
             g = g.withColumn(ck, F.lit(0))
             continue
-        lookup = spark.createDataFrame(
+        lookup = local_frame(
+            spark,
             [(k, i // chunk_of[d]) for i, k in enumerate(keys[d].tolist())],
             T.StructType([T.StructField(d, g.schema[d].dataType),
                           T.StructField(ck, T.IntegerType())]))
@@ -389,12 +416,7 @@ def read_zarr_xds(
             fields.append(T.StructField(nm, _spark_type_of(base)))
         specs.append((out, a, [dims.index(d) for d in main], names))
 
-    manifest = [tuple(int(i) for i in cid) for cid in anchor.chunk_ids()]
-    par = min(len(manifest),
-              spark.sparkContext.defaultParallelism * 2) or 1
-    mdf = spark.createDataFrame(
-        [(i, list(c)) for i, c in enumerate(manifest)],
-        "chunk long, cid array<int>").repartition(par, "chunk")
+    mdf = _manifest(spark, anchor.cdata_shape)
     schema = T.StructType(fields)
     anchor_chunks = anchor.chunks
     anchor_shape = anchor.shape
@@ -464,6 +486,20 @@ def read_zarr_xds(
                     yield out_pdf
 
     return mdf.mapInPandas(read_chunks, schema)
+
+
+def _manifest(spark: SparkSession, grid: tuple[int, ...]) -> DataFrame:
+    """One row per chunk of a chunk grid of shape ``grid``: its chunk
+    index ``cid`` (array<int>) in C order — ``np.ndindex(*grid)``'s
+    order — unravelled from ``spark.range`` ids in the JVM, so the
+    manifest has no Python stage and no shuffle."""
+    n = int(np.prod(grid, dtype=np.int64))
+    par = min(n, spark.sparkContext.defaultParallelism * 2) or 1
+    ids = spark.range(0, n, 1, par)
+    stride = np.cumprod((1,) + tuple(grid[:0:-1]))[::-1]
+    cid = [F.expr(f"CAST(id DIV {int(s)} % {int(c)} AS INT)")
+           for s, c in zip(stride, grid)]
+    return ids.select(F.array(*cid).cast("array<int>").alias("cid"))
 
 
 def _spark_type_of(dtype: np.dtype) -> T.DataType:
@@ -610,9 +646,9 @@ def describe_zarr_store(spark: SparkSession, store: str) -> DataFrame:
         rows.append((p, list(dims), [int(s) for s in anchor.shape],
                      [int(c) for c in anchor.chunks],
                      len(data), nbytes))
-    return spark.createDataFrame(
-        rows, "partition string, dims array<string>, shape array<int>, "
-              "chunks array<int>, n_vars int, logical_bytes long")
+    return local_frame(
+        spark, rows, "partition string, dims array<string>, shape array<int>, "
+                     "chunks array<int>, n_vars int, logical_bytes long")
 
 
 def append_zarr_vars(
@@ -689,20 +725,21 @@ def write_vis_zarr_partitions(
 
     The partition loop is a driver loop over DDI COUNT (handfuls, the
     reference's own shape); each iteration's write is the fully
-    distributed group-per-chunk job, and the partition filter prunes
-    at the scan when ``df`` reads a ddi-partitioned store.
+    distributed group-per-chunk job. ``df`` is read once, into a cache
+    held for the call, and each partition's write filters that cache.
     """
-    parts = sorted(r[0] for r in df.select(partition_col)
-                   .distinct().collect())
     info: dict[str, dict] = {}
-    for p in parts:
-        name = f"xds{p}"
-        sub = df.filter(F.col(partition_col) == p).drop(partition_col)
-        part_attrs = dict(attrs or {})
-        part_attrs[partition_col] = int(p) if hasattr(p, "__int__") \
-            else p
-        info[name] = write_vis_zarr(
-            sub, store, name, time_chunk=time_chunk,
-            chan_chunk=chan_chunk, attrs=part_attrs,
-            compressor=compressor)
+    with _cached(df) as df:
+        parts = sorted(r[0] for r in df.select(partition_col)
+                       .distinct().collect())
+        for p in parts:
+            name = f"xds{p}"
+            sub = df.filter(F.col(partition_col) == p).drop(partition_col)
+            part_attrs = dict(attrs or {})
+            part_attrs[partition_col] = int(p) if hasattr(p, "__int__") \
+                else p
+            info[name] = write_vis_zarr(
+                sub, store, name, time_chunk=time_chunk,
+                chan_chunk=chan_chunk, attrs=part_attrs,
+                compressor=compressor)
     return info

@@ -138,6 +138,10 @@ def test_distributed_time_rank_splits_hot_buckets(spark):
     per_bucket = pdf.groupby("__vb").size()
     assert per_bucket.max() <= 500 + 60  # floor-boundary slack
     assert len(per_bucket) >= 6
+    # the refine table is a LocalRelation, not a Python-serialized RDD
+    import re
+    plan = ranked._jdf.queryExecution().analyzed().toString()
+    assert re.search(r"LocalRelation \[__vb#\d+, __k#", plan), plan
     # uniform data keeps the single-probe path and stays exact
     uni = spark.createDataFrame(pd.DataFrame(
         {"time": pd.to_datetime(np.arange(200) * 7.0, unit="s")}))

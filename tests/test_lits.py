@@ -1,11 +1,13 @@
 """One-call array literals: exact values, empty input and non-finite
-values all type as arrays of DOUBLE."""
+values all type as arrays of DOUBLE. Driver-built tables plan as a
+LocalRelation and keep their values exactly."""
 
 from __future__ import annotations
 
 import math
 
-from cngi_prototype_spark.functions.lits import flit_arr, flit_arr2d
+from cngi_prototype_spark.functions.lits import (flit_arr, flit_arr2d,
+                                                 local_frame)
 
 
 def _one(spark, col):
@@ -34,3 +36,35 @@ def test_flit_arr_non_finite(spark):
     typ, got = _one(spark, flit_arr2d([[math.inf], [math.nan, -1.0]]))
     assert typ == "array<array<double>>"
     assert got[0] == [math.inf] and math.isnan(got[1][0]) and got[1][1] == -1.0
+
+
+def _plan_class(df) -> str:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+def test_local_frame_values_exact(spark):
+    big = 2 ** 53 + 1  # not representable as a double
+    rows = [(big, None, math.nan, ["a", None], [1, 2]),
+            (-big, 7, -0.0, [], None)]
+    df = local_frame(spark, rows, "k long, i int, x double, "
+                                  "s array<string>, a array<int>")
+    assert _plan_class(df) == "LocalRelation"
+    assert df.schema.simpleString() == (
+        "struct<k:bigint,i:int,x:double,s:array<string>,a:array<int>>")
+    got = df.collect()
+    assert got[0]["k"] == big and got[1]["k"] == -big
+    assert got[0]["i"] is None and got[1]["i"] == 7
+    assert math.isnan(got[0]["x"])
+    assert got[1]["x"] == 0.0 and math.copysign(1.0, got[1]["x"]) == -1.0
+    assert got[0]["s"] == ["a", None] and got[1]["s"] == []
+    assert got[0]["a"] == [1, 2] and got[1]["a"] is None
+
+
+def test_local_frame_empty_keeps_schema(spark):
+    from pyspark.sql import types as T
+    schema = T.StructType([T.StructField("k", T.LongType()),
+                           T.StructField("x", T.DoubleType())])
+    df = local_frame(spark, [], schema)
+    assert _plan_class(df) == "LocalRelation"
+    assert df.schema == schema
+    assert df.collect() == []

@@ -132,3 +132,35 @@ def test_timed_min_steal_guard(monkeypatch):
     durations[:] = [2.5]
     assert bench._timed_min(lambda: None, runs=1) == 2.5
     assert durations == []
+
+
+def test_time_tier_warm_run_is_untimed(monkeypatch):
+    """_time_tier: each query gets WARM_RUNS untimed runs before its
+    timed ones; query_runs and the min hold the timed walls only, and a
+    failing query is an error entry, not a crash."""
+    import bench
+
+    clock = [0.0]
+    durations: list[float] = []
+
+    def fake_run(df):
+        clock[0] += durations.pop(0)
+
+    def fake_entry(name):
+        if name == "broken":
+            raise KeyError(name)
+        return lambda spark, sf_dir: None
+
+    monkeypatch.setattr(bench, "_run", fake_run)
+    monkeypatch.setattr(bench, "entry", fake_entry)
+    monkeypatch.setattr(bench.time, "time", lambda: clock[0])
+
+    assert bench.WARM_RUNS == 1
+    # per query: a slow warm run, then three timed runs
+    durations[:] = [7.0, 1.5, 1.0, 1.2, 9.0, 2.0, 2.5, 2.2]
+    timings, query_runs, errors = bench._time_tier(
+        None, "sf", ["qa", "broken", "qb"], runs=3)
+    assert durations == []
+    assert query_runs == {"qa": [1.5, 1.0, 1.2], "qb": [2.0, 2.5, 2.2]}
+    assert timings == {"qa": 1.0, "qb": 2.0}
+    assert list(errors) == ["broken"]

@@ -126,13 +126,8 @@ def _vis_df(spark, nt=6, nb=3, nc=4, npol=2, drop_every=7):
               "flag boolean, scan_number int, state_id int, field_id int")
 
 
-def test_vis_zarr_roundtrip_exact(spark, tmp_path):
-    store = str(tmp_path / "vis.zarr")
-    src = _vis_df(spark)
-    info = write_vis_zarr(src, store, "xds0", time_chunk=2,
-                          attrs={"origin": "test"})
-    assert info["rows"] == src.count()
-    back = read_vis_zarr(spark, store, "xds0")
+def _assert_same_rows(src, back):
+    """``back`` (a read-back) holds exactly ``src``'s rows and values."""
     key = ["time", "baseline", "chan", "pol"]
     a = src.withColumn("flag", F.col("flag").cast("int")) \
         .orderBy(*key).toPandas()
@@ -143,6 +138,68 @@ def test_vis_zarr_roundtrip_exact(spark, tmp_path):
             assert np.array_equal(a[c].to_numpy(), b[c].to_numpy()), c
         else:
             assert a[c].tolist() == b[c].tolist(), c
+
+
+def _newest_execution(spark) -> int:
+    """Id of the newest SQL execution (-1 when none ran)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    status = spark._jsparkSession.sharedState().statusStore()
+    n = status.executionsCount()
+    return status.executionsList(n - 1, 1).apply(0).executionId() \
+        if n else -1
+
+
+def _executions_since(spark, last: int) -> list:
+    """The SQL executions (status-store records) after id ``last``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    status = spark._jsparkSession.sharedState().statusStore()
+    n = status.executionsCount()
+    tail = status.executionsList(max(n - 32, 0), 32)
+    return [tail.apply(i) for i in range(tail.size())
+            if tail.apply(i).executionId() > last]
+
+
+def _scan_rows(spark, executions, prefix: str) -> int:
+    """Rows emitted by the ``prefix`` scan nodes of ``executions``."""
+    status = spark._jsparkSession.sharedState().statusStore()
+    total = 0
+    for e in executions:
+        values, it = {}, status.executionMetrics(e.executionId()).iterator()
+        while it.hasNext():
+            t = it.next()
+            values[int(t._1())] = t._2()
+        nodes = status.planGraph(e.executionId()).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if not node.name().startswith(prefix):
+                continue
+            ms = node.metrics()
+            for m in range(ms.size()):
+                pm = ms.apply(m)
+                if pm.name() == "number of output rows":
+                    total += int(values.get(int(pm.accumulatorId()), "0")
+                                 .replace(",", ""))
+    return total
+
+
+def _pinned(spark) -> tuple[int, int]:
+    """(cached plans, persisted RDDs) held by the session right now."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    if cm.numCachedEntries() == 0:
+        assert cm.isEmpty()
+    if rdds.size() == 0:
+        assert rdds.isEmpty()
+    return cm.numCachedEntries(), rdds.size()
+
+
+def test_vis_zarr_roundtrip_exact(spark, tmp_path):
+    store = str(tmp_path / "vis.zarr")
+    src = _vis_df(spark)
+    info = write_vis_zarr(src, store, "xds0", time_chunk=2,
+                          attrs={"origin": "test"})
+    assert info["rows"] == src.count()
+    _assert_same_rows(src, read_vis_zarr(spark, store, "xds0"))
 
 
 def test_vis_zarr_store_is_spec_shaped(spark, tmp_path):
@@ -204,8 +261,10 @@ def test_describe_zarr_store(spark, tmp_path):
     store = str(tmp_path / "vis.zarr")
     write_vis_zarr(_vis_df(spark), store, "xds0", time_chunk=2)
     write_vis_zarr(_vis_df(spark, nt=2, drop_every=10 ** 9), store, "xds1")
-    d = {r.partition: r for r in
-         describe_zarr_store(spark, store).collect()}
+    desc = describe_zarr_store(spark, store)
+    assert desc._jdf.queryExecution().analyzed().getClass() \
+        .getSimpleName() == "LocalRelation"
+    d = {r.partition: r for r in desc.collect()}
     assert d["xds0"].shape == [6, 3, 4, 2]
     assert d["xds0"].chunks == [2, 3, 4, 2]
     assert d["xds1"].shape == [2, 3, 4, 2]
@@ -400,25 +459,78 @@ def test_write_vis_zarr_runs_two_sql_executions(spark, tmp_path):
            .groupBy("time", "baseline", "chan", "pol")
            .agg(F.avg("data_re").alias("data_re"),
                 F.avg("data_im").alias("data_im")))
-    status = spark._jsparkSession.sharedState().statusStore()
-
-    def newest_execution() -> int:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        n = status.executionsCount()
-        return status.executionsList(n - 1, 1).apply(0).executionId() \
-            if n else -1
-
-    def executions_since(last: int) -> int:
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        n = status.executionsCount()
-        tail = status.executionsList(max(n - 16, 0), 16)
-        return sum(tail.apply(i).executionId() > last
-                   for i in range(tail.size()))
-
-    last = newest_execution()
+    last = _newest_execution(spark)
     info = write_vis_zarr(src, str(tmp_path / "vis.zarr"), "xds0")
-    assert executions_since(last) == 2
+    assert len(_executions_since(spark, last)) == 2
     assert info["rows"] == src.count()
+
+
+def test_write_vis_zarr_leaves_nothing_cached(spark, tmp_path):
+    """The input is cached for the call only: no cached plan and no
+    persisted RDD outlives write_vis_zarr, whether it returns or raises
+    (no rows, a null dim)."""
+    before = _pinned(spark)
+    src = _vis_df(spark)
+    write_vis_zarr(src, str(tmp_path / "ok.zarr"), "xds0", time_chunk=2)
+    assert _pinned(spark) == before
+    with pytest.raises(ValueError, match="no rows"):
+        write_vis_zarr(src.filter("baseline > 99"),
+                       str(tmp_path / "empty.zarr"), "xds0")
+    assert _pinned(spark) == before
+    nulled = src.withColumn(
+        "chan", F.when(F.col("chan") == 1, None).otherwise(F.col("chan")))
+    with pytest.raises(ValueError, match="chan"):
+        write_vis_zarr(nulled, str(tmp_path / "null.zarr"), "xds0")
+    assert _pinned(spark) == before
+
+
+def test_write_keeps_a_callers_cache(spark, tmp_path):
+    """An input the caller cached is used as is and stays cached."""
+    from pyspark import StorageLevel
+    from cngi_prototype_spark.sources.zarr_io import (
+        write_vis_zarr_partitions)
+    src = _vis_df(spark, nt=2).withColumn("ddi", F.lit(0)).cache()
+    try:
+        src.count()
+        before = _pinned(spark)
+        info = write_vis_zarr_partitions(src, str(tmp_path / "vis.zarr"))
+        assert info["xds0"]["rows"] == src.count()
+        assert src.storageLevel != StorageLevel.NONE
+        assert _pinned(spark) == before
+    finally:
+        src.unpersist(blocking=True)
+
+
+def test_chunked_two_dims_edge_chunks_roundtrip(spark, tmp_path):
+    """A grid chunked on time AND chan with ragged edge chunks (5 times
+    in chunks of 2, 4 chans in chunks of 3) round-trips exactly, and
+    each chunked dim's (key -> chunk) lookup is a LocalTableScan in the
+    write's plan."""
+    store = str(tmp_path / "vis.zarr")
+    src = _vis_df(spark, nt=5, nc=4)
+    last = _newest_execution(spark)
+    info = write_vis_zarr(src, store, "xds0", time_chunk=2, chan_chunk=3)
+    writes = _executions_since(spark, last)
+    assert info["chunks"] == {"time": 2, "baseline": 3, "chan": 3, "pol": 2}
+    assert info["rows"] == src.count()
+    # the full-dim write (the second execution) joins both lookups
+    plan = writes[1].physicalPlanDescription()
+    assert plan.count("LocalTableScan") >= 2, plan
+    assert os.path.exists(os.path.join(store, "xds0", "DATA", "2.0.1.0"))
+    _assert_same_rows(src, read_vis_zarr(spark, store, "xds0"))
+
+
+def test_read_vis_zarr_plan_has_no_exchange_or_rdd_scan(spark, tmp_path):
+    """The read manifest is a JVM range: no shuffle and no Python-
+    serialized RDD below the chunk decoder, and every chunk is read."""
+    store = str(tmp_path / "vis.zarr")
+    src = _vis_df(spark, nt=5, nc=4)
+    write_vis_zarr(src, store, "xds0", time_chunk=2, chan_chunk=3)
+    back = read_vis_zarr(spark, store, "xds0")
+    assert len(back.collect()) == src.count()
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Range" in plan, plan
+    assert "Exchange" not in plan and "ExistingRDD" not in plan, plan
 
 
 def test_read_zarr_permuted_var_dims_raise(spark, tmp_path):
@@ -444,6 +556,36 @@ def test_read_zarr_permuted_var_dims_raise(spark, tmp_path):
     zs.consolidate_metadata(root)
     with pytest.raises(Exception, match="not alignable"):
         read_zarr_xds(spark, root, "x", anchor="DATA").collect()
+
+
+@pytest.mark.parametrize("grid", [(3, 1, 4), (5,), (), (0, 2)])
+def test_manifest_is_ndindex_order(spark, grid):
+    """The JVM-built read manifest lists every chunk of the grid once,
+    in np.ndindex (C) order, including 0-d and empty grids."""
+    from cngi_prototype_spark.sources.zarr_io import _manifest
+    got = [tuple(r.cid) for r in _manifest(spark, grid).collect()]
+    assert got == list(np.ndindex(*grid))
+
+
+def test_write_vis_zarr_partitions_scan_source_once(spark, tmp_path):
+    """The partition scan and every partition's write read the source
+    once between them: its parquet scan emits each row exactly once."""
+    from cngi_prototype_spark.sources.zarr_io import (
+        write_vis_zarr_partitions)
+    path = str(tmp_path / "src.parquet")
+    _vis_df(spark, nt=4).withColumn("ddi", F.col("baseline") % 2) \
+        .write.parquet(path)
+    src = spark.read.parquet(path)
+    n = src.count()
+    before = _pinned(spark)
+    last = _newest_execution(spark)
+    info = write_vis_zarr_partitions(src, str(tmp_path / "vis.zarr"),
+                                     time_chunk=2)
+    assert set(info) == {"xds0", "xds1"}
+    assert sum(i["rows"] for i in info.values()) == n
+    assert _scan_rows(spark, _executions_since(spark, last),
+                      "Scan parquet") == n
+    assert _pinned(spark) == before
 
 
 def test_write_vis_zarr_partitions_mxds(spark, tmp_path):
@@ -484,18 +626,7 @@ def test_object_store_url_roundtrip_distributed(spark, tmp_path):
         # the store physically landed under the mapped root, zarr-shaped
         assert os.path.exists(
             os.path.join(root, "bucket/vis.zarr/.zmetadata"))
-        back = read_vis_zarr(spark, store, "xds0")
-        key = ["time", "baseline", "chan", "pol"]
-        a = src.withColumn("flag", F.col("flag").cast("int")) \
-            .orderBy(*key).toPandas()
-        b = back.select(*a.columns).orderBy(*key).toPandas()
-        assert len(a) == len(b)
-        for c in a.columns:
-            if a[c].dtype.kind == "f":
-                assert np.array_equal(a[c].to_numpy(),
-                                      b[c].to_numpy()), c
-            else:
-                assert a[c].tolist() == b[c].tolist(), c
+        _assert_same_rows(src, read_vis_zarr(spark, store, "xds0"))
         assert describe_zarr_store(spark, store).count() == 1
     finally:
         zs._FS_FACTORIES.pop("mock-s3", None)
