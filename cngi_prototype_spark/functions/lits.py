@@ -22,6 +22,24 @@ re-serialize the rows (a 2-row table: 314 ms against 40 ms, Spark
 4.1.2 on a 4-CPU host, most of it PySpark's per-task worker set-up). :func:`local_frame` ships
 the rows once as Arrow and plans a ``LocalRelation`` the JVM reads
 directly.
+
+A Column-API formula has a third, per-call price. Under PySpark 4.1
+every ``pyspark.sql.functions`` call and every Column operator runs
+inside an origin wrapper (``pyspark/errors/utils.py``, ``_with_origin``)
+that makes 4-6 py4j round trips of its own: the active session, a JVM
+class lookup, a conf read, and setting then clearing the call site. A
+per-row formula spelled as dozens of such calls costs hundreds of
+round trips per build (the imaging geometry cost ~230 per use). Build
+each derived column from ONE parsed SQL expression instead,
+``F.expr(text)``, with doubles spelled by :func:`_d` (exact, as above)
+and column names by :func:`ident`; write the text in the Column form's
+operand order and casts (AND chains through :func:`sql_and`), and
+Catalyst gets the same expression tree.
+The parser's ANTLR DFA cache is JVM-wide and grows with the distinct
+expression SHAPES parsed, not with the number of builds: the imaging
+builders' shapes hold about 3.4 MB of driver heap (``ATNConfig``,
+``DFAState[]`` and prediction contexts in a ``jmap -histo:live`` of
+the perfbench image_cycle driver).
 """
 
 from __future__ import annotations
@@ -43,6 +61,23 @@ def _d(x) -> str:
     if math.isnan(x):
         return "double('NaN')"
     return "double('Infinity')" if x > 0 else "double('-Infinity')"
+
+
+def ident(name: str) -> str:
+    """``name`` as a SQL identifier in expression text: backticks, with
+    inner backticks doubled, so any column name (spaces, reserved words,
+    backticks) reads back literally."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_and(*terms: str) -> str:
+    """``t1 AND t2 AND ...`` nested left-deep, the tree a Column ``&``
+    chain builds: the SQL parser balances an unparenthesized AND chain
+    into a different (equivalent) tree."""
+    out = terms[0]
+    for t in terms[1:]:
+        out = f"({out}) AND ({t})"
+    return out
 
 
 def _arr(items: list[str], sql_type: str) -> str:

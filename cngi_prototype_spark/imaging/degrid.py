@@ -25,11 +25,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cngi_prototype_spark.functions.lits import local_frame
 from cngi_prototype_spark.imaging.grid import (
     GridParms,
     _cgk_at,
     _flit_arr,
-    _scaled_pos,
+    _geometry,
+    _on_grid,
     _slab_salt_map,
     _tap_explode,
     _tap_iu_iv,
@@ -82,16 +84,8 @@ def degrid_visibilities(
                               v=v, freq=freq, chan=chan, pol=pol,
                               out=out, slab_w=slab_w,
                               salt_probe=salt_probe)
-    u_pos, v_pos = _scaled_pos(gp, F.col(u), F.col(v), F.col(freq))
-    geom = (vis_df
-            .withColumn("_u_c", F.floor(u_pos + F.lit(0.5)).cast("int"))
-            .withColumn("_v_c", F.floor(v_pos + F.lit(0.5)).cast("int"))
-            .withColumn("_du", F.floor((F.col("_u_c") - u_pos) * F.lit(float(gp.oversampling)) + F.lit(0.5)).cast("int"))
-            .withColumn("_dv", F.floor((F.col("_v_c") - v_pos) * F.lit(float(gp.oversampling)) + F.lit(0.5)).cast("int")))
-    half = gp.half
-    in_bounds = ((F.col("_u_c") + half < gp.n_u) & (F.col("_u_c") - half >= 0)
-                 & (F.col("_v_c") + half < gp.n_v) & (F.col("_v_c") - half >= 0))
-    geom = geom.withColumn("_ok", in_bounds)
+    geom = (_geometry(vis_df, gp, u, v, freq)
+            .withColumn("_ok", F.expr(_on_grid(gp))))
 
     # kernel LUT + tap indices built driver-cheap (r15): one expr-string
     # array literal and one exploded sequence instead of ~900 py4j
@@ -208,21 +202,8 @@ def _degrid_kernel(
     lut = np.where(raw < len(cgk), cgk[np.minimum(raw, len(cgk) - 1)],
                    0.0)
 
-    u_pos, v_pos = _scaled_pos(gp, F.col(u), F.col(v), F.col(freq))
-    geom = (vis_df
-            .withColumn("_u_c", F.floor(u_pos + F.lit(0.5)).cast("int"))
-            .withColumn("_v_c", F.floor(v_pos + F.lit(0.5)).cast("int"))
-            .withColumn("_du", F.floor(
-                (F.col("_u_c") - u_pos) * F.lit(float(ov))
-                + F.lit(0.5)).cast("int"))
-            .withColumn("_dv", F.floor(
-                (F.col("_v_c") - v_pos) * F.lit(float(ov))
-                + F.lit(0.5)).cast("int")))
-    in_bounds = ((F.col("_u_c") + half < gp.n_u)
-                 & (F.col("_u_c") - half >= 0)
-                 & (F.col("_v_c") + half < gp.n_v)
-                 & (F.col("_v_c") - half >= 0))
-    geom = geom.withColumn("_ok", in_bounds)
+    geom = (_geometry(vis_df, gp, u, v, freq)
+            .withColumn("_ok", F.expr(_on_grid(gp))))
 
     vis_cols = list(vis_df.columns)
     vsel = (geom.filter("_ok").drop("_ok")
@@ -306,9 +287,9 @@ def _degrid_kernel(
             cnts, npart,
             cap_rows=(64 << 20) // max(56, _est_row_bytes(vsel.schema)))
         if hot:
-            hot_df = spark.createDataFrame(
-                [(c, p, s, n) for (c, p, s), n in hot.items()],
-                schema=f"{chan} int, {pol} int, _s int, _hsub int")
+            hot_df = local_frame(
+                spark, [(c, p, s, n) for (c, p, s), n in hot.items()],
+                f"{chan} int, {pol} int, _s int, _hsub int")
             # vis: rows of a hot group spread over _hsub sub-buckets by
             # a row-id hash; cold groups skip the hash (lazy branch).
             # Broadcast join, never an inline CASE chain (grid.py's

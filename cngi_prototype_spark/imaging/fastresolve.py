@@ -57,6 +57,7 @@ from pyspark.sql import types as T
 from cngi_prototype_spark.imaging.planes import plane_arrays
 
 from cngi_prototype_spark.functions.exact import dsum
+from cngi_prototype_spark.functions.lits import local_frame
 
 
 def fast_resolve_plane(dirty: np.ndarray, psf: np.ndarray, *,
@@ -158,9 +159,9 @@ def fit_spectral_index(
     sums through the DECIMAL-exact accumulator for the oracle twin.
     """
     spark = model_df.sparkSession
-    xdf = spark.createDataFrame(
-        [(int(c), math.log(float(f))) for c, f in sorted(freqs.items())],
-        schema=f"{chan} int, _x double")
+    xdf = local_frame(
+        spark, [(int(c), math.log(float(f))) for c, f in sorted(freqs.items())],
+        f"{chan} int, _x double")
     # LEFT join + raise on a missing frequency: an inner join would
     # silently drop data channels absent from freqs and fit alpha from
     # a partial cube (same contract as deconvolve_multiterm_clean's

@@ -62,6 +62,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# SQL-text builders and one-py4j-call array literals; see
+# functions/lits.py for the build-cost and value-exactness notes
+from cngi_prototype_spark.functions.lits import _arr, _d, ident, local_frame, sql_and
+from cngi_prototype_spark.functions.lits import flit_arr as _flit_arr
 from cngi_prototype_spark.imaging.kernels import pswf_kernel_1d
 
 C_M_S = 299792458.0
@@ -98,11 +102,44 @@ class GridParms:
         return pswf_kernel_1d(self.oversampling, self.support)
 
 
-def _scaled_pos(gp: GridParms, u: Column, v: Column, freq: Column) -> tuple[Column, Column]:
-    # SG:274-276 — uv in meters × (-freq·cell·n/c), shifted to grid center
-    u_pos = u * (-(freq * F.lit(gp.cell_u) * F.lit(float(gp.n_u))) / F.lit(C_M_S)) + F.lit(float(gp.n_u // 2))
-    v_pos = v * (-(freq * F.lit(gp.cell_v) * F.lit(float(gp.n_v))) / F.lit(C_M_S)) + F.lit(float(gp.n_v // 2))
-    return u_pos, v_pos
+def _scaled_uv(gp: GridParms, u: str, v: str, freq: str) -> tuple[str, str]:
+    """SQL text of the scaled uv position per axis (SG:274-276): uv in
+    meters × ``-(freq·cell·n)/c``, not yet shifted to the grid center.
+    The one production spelling of the gridding geometry; the DuckDB
+    twins (``_sql_geom``, ``weights._sql_cells``) transcribe it on
+    their own so the gate stays an independent check."""
+    def s(axis: str, cell: float, n: int) -> str:
+        return f"{ident(axis)} * (-({ident(freq)} * {_d(cell)} * {_d(n)}) / {_d(C_M_S)})"
+
+    return s(u, gp.cell_u, gp.n_u), s(v, gp.cell_v, gp.n_v)
+
+
+def _scaled_pos(gp: GridParms, u: str, v: str, freq: str) -> tuple[str, str]:
+    """SQL text of the scaled uv position shifted to the grid center."""
+    su, sv = _scaled_uv(gp, u, v, freq)
+    return f"({su} + {_d(gp.n_u // 2)})", f"({sv} + {_d(gp.n_v // 2)})"
+
+
+def _geometry(df: DataFrame, gp: GridParms, u: str, v: str,
+              freq: str) -> DataFrame:
+    """``df`` plus the per-visibility geometry (SG:300-343): center cell
+    ``_u_c``/``_v_c`` and fractional-offset index ``_du``/``_dv``."""
+    u_pos, v_pos = _scaled_pos(gp, u, v, freq)
+    ov, half = _d(gp.oversampling), _d(0.5)
+    return (df.withColumns({
+        "_u_c": F.expr(f"CAST(floor({u_pos} + {half}) AS INT)"),
+        "_v_c": F.expr(f"CAST(floor({v_pos} + {half}) AS INT)")})
+        .withColumns({
+            "_du": F.expr(f"CAST(floor((_u_c - {u_pos}) * {ov} + {half}) AS INT)"),
+            "_dv": F.expr(f"CAST(floor((_v_c - {v_pos}) * {ov} + {half}) AS INT)")}))
+
+
+def _on_grid(gp: GridParms) -> str:
+    """SQL text: the kernel footprint around ``(_u_c, _v_c)`` lies on
+    the grid."""
+    h = gp.half
+    return sql_and(f"_u_c + {h} < {gp.n_u}", f"_u_c - {h} >= 0",
+                   f"_v_c + {h} < {gp.n_v}", f"_v_c - {h} >= 0")
 
 
 def _prepare(df: DataFrame, gp: GridParms, u: str, v: str, freq: str,
@@ -111,35 +148,27 @@ def _prepare(df: DataFrame, gp: GridParms, u: str, v: str, freq: str,
     """Common per-visibility geometry: center cell, fractional-offset
     index, in-bounds + nonzero filters (SG:300-343). ``nonzero=False``
     skips the data-nonzero filter (the fused image+PSF path applies
-    its own per-aggregate masks instead — see ``with_psf``)."""
-    u_pos, v_pos = _scaled_pos(gp, F.col(u), F.col(v), F.col(freq))
-    out = (
-        df.withColumn("_u_c", F.floor(u_pos + F.lit(0.5)).cast("int"))
-        .withColumn("_v_c", F.floor(v_pos + F.lit(0.5)).cast("int"))
-        .withColumn("_du", F.floor((F.col("_u_c") - u_pos) * F.lit(float(gp.oversampling)) + F.lit(0.5)).cast("int"))
-        .withColumn("_dv", F.floor((F.col("_v_c") - v_pos) * F.lit(float(gp.oversampling)) + F.lit(0.5)).cast("int"))
-    )
-    half = gp.half
-    out = out.filter(
-        (F.col("_u_c") + half < gp.n_u) & (F.col("_u_c") - half >= 0)
-        & (F.col("_v_c") + half < gp.n_v) & (F.col("_v_c") - half >= 0)
-    )
+    its own per-aggregate masks instead — see ``with_psf``).
+
+    Adds ``_u_c, _v_c, _du, _dv`` (int) and the weighted data
+    ``_wd_re, _wd_im``; each derived column is one parsed SQL
+    expression (``functions/lits.py``: a Column-API formula costs a
+    few py4j round trips per operator). Column names enter the text
+    through ``ident``, so any name reads back literally."""
+    out = _geometry(df, gp, u, v, freq).filter(F.expr(_on_grid(gp)))
+    w = ident(weight)
     if re is None:  # psf / weight gridding: weighted data IS the weight
-        out = out.withColumn("_wd_re", F.col(weight)).withColumn("_wd_im", F.lit(0.0))
+        wd = {"_wd_re": F.expr(w), "_wd_im": F.expr(_d(0.0))}
     else:
-        out = out.withColumn("_wd_re", F.col(re) * F.col(weight)).withColumn(
-            "_wd_im", F.col(im) * F.col(weight))
+        wd = {"_wd_re": F.expr(f"{ident(re)} * {w}"),
+              "_wd_im": F.expr(f"{ident(im)} * {w}")}
+    out = out.withColumns(wd)
     if not nonzero:
         return out
-    return out.filter(
-        F.col("_wd_re").isNotNull() & F.col("_wd_im").isNotNull()
-        & ((F.col("_wd_re") != 0) | (F.col("_wd_im") != 0))
-    )
+    return out.filter(F.expr(sql_and(
+        "_wd_re IS NOT NULL", "_wd_im IS NOT NULL",
+        "_wd_re != 0 OR _wd_im != 0")))
 
-
-# one-py4j-call array literals — shared with the ANN tier; see
-# functions/lits.py for the build-cost and value-exactness notes
-from cngi_prototype_spark.functions.lits import flit_arr as _flit_arr  # noqa: E402
 
 
 def _tap_explode(sup: int, lo: int, alias: str = "_ti") -> Column:
@@ -182,7 +211,7 @@ def grid_visibilities(
     salt_probe: bool = False,
     with_psf: bool = False,
     fuse_sumw: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, DataFrame | None]:
     """Grid visibilities → ``(grid_df, sum_weight_df)``.
 
     grid_df: one row per touched cell ``(chan, pol, u_idx, v_idx,
@@ -199,6 +228,9 @@ def grid_visibilities(
     every core gets work; ``salt_probe=True`` adds one counting job
     at build that sub-buckets hot slabs (``_dense_planes_arrow``).
     Grids ``_pack_bits`` cannot pack raise ``ValueError`` at build.
+    The partials carry their own normalizer, so this mode returns
+    ``(planes, None)`` and builds no ``sum_weight`` subtree (its
+    analysis alone cost ~40-50 ms per build, for a plan no caller ran).
 
     ``with_psf=True`` (explode variant) adds a ``psf_re`` column —
     the weight-sampling grid — to the SAME aggregation, so a CLEAN
@@ -258,7 +290,6 @@ def grid_visibilities(
                                          F.col(weight)).otherwise(0.0))
             .withColumn("_w_psf", F.coalesce(F.col(weight), F.lit(0.0))))
     cgk = gp.kernel_1d()
-    cgk_lit = _flit_arr(cgk)
 
     def agg(c: Column) -> Column:
         if not precise:
@@ -301,9 +332,28 @@ def grid_visibilities(
         for x in terms[1:]:
             acc = acc + x
         norm_vals.append(acc)
-    norm_arr = _flit_arr(norm_vals)
-    nu = F.element_at(norm_arr, F.col("_du") + F.lit(half_ov + 1))
-    nv = F.element_at(norm_arr, F.col("_dv") + F.lit(half_ov + 1))
+    norm_sql = _arr([_d(x) for x in norm_vals], "ARRAY<DOUBLE>")
+    nu_sql = f"element_at({norm_sql}, _du + {half_ov + 1})"
+    nv_sql = f"element_at({norm_sql}, _dv + {half_ov + 1})"
+
+    if variant == "kernel" and dense_planes:
+        if precise:
+            raise ValueError("dense_planes is the production fast path; "
+                             "precise gate mode emits sparse cells")
+        if _pack_bits(gp) is None:
+            raise ValueError(
+                f"dense_planes cannot pack oversampling={gp.oversampling} "
+                f"on a {gp.n_u}x{gp.n_v} grid (needs oversampling <= 254 "
+                f"and an int32-indexable slab); use output='cells'")
+        # make_image's planes path normalizes from the embedded
+        # per-slab sums (wn reuses the codegen norm LUT above)
+        wn_sql = f"{ident(weight)} * ({nu_sql} * {nv_sql})"
+        return _dense_planes_arrow(prepared, gp, cgk, chan=chan, pol=pol,
+                                   n_planes=n_planes, wn_sql=wn_sql,
+                                   salt_probe=salt_probe), None
+
+    cgk_lit = _flit_arr(cgk)
+    nu, nv = F.expr(nu_sql), F.expr(nv_sql)
     w_img = F.col("_w_img") if psf_fused else F.col(weight)
     if precise:
         # gate mode: per-row quantized terms, row order can't matter —
@@ -417,26 +467,8 @@ def grid_visibilities(
         return grid, sum_weight
 
     if variant == "kernel":
-        if not dense_planes:
-            return _kernel_variant(prepared, gp, cgk, chan=chan, pol=pol,
-                                   precise=precise), sum_weight
-        if precise:
-            raise ValueError("dense_planes is the production fast path; "
-                             "precise gate mode emits sparse cells")
-        if _pack_bits(gp) is None:
-            raise ValueError(
-                f"dense_planes cannot pack oversampling={gp.oversampling} "
-                f"on a {gp.n_u}x{gp.n_v} grid (needs oversampling <= 254 "
-                f"and an int32-indexable slab); use output='cells'")
-        # the standalone sum_weight branch stays lazily available;
-        # make_image's planes path normalizes from the embedded
-        # per-slab sums (wn reuses the codegen norm LUT above) and never
-        # executes it
-        grid = _dense_planes_arrow(prepared, gp, cgk, chan=chan, pol=pol,
-                                   n_planes=n_planes,
-                                   wn_col=F.col(weight) * (nu * nv),
-                                   salt_probe=salt_probe)
-        return grid, sum_weight
+        return _kernel_variant(prepared, gp, cgk, chan=chan, pol=pol,
+                               precise=precise), sum_weight
 
     raise ValueError(f"unknown gridder variant: {variant}")
 
@@ -463,22 +495,23 @@ def _pack_bits(gp: GridParms) -> tuple[int, int] | None:
 
 
 def _chan_pol_key(chan: str, pol: str, low_bits: int,
-                  what: str) -> tuple[Column, Column, Column]:
+                  what: str) -> tuple[str, str, str]:
     """High fields of a packed int64 key ``chan | pol (4) | low_bits``
     and their id range, shared by the dense gridder and the imaging
-    weights read-back. Returns ``(prefix, ids_ok, overflow)``: the two
-    shifted fields, the per-row range test and a ``raise_error``
-    naming the bounds. pol has 4 bits and chan the rest below the sign
-    bit, at most 31; an out-of-range (or negative) id would silently
-    bleed into its neighboring field and alias another plane's cell."""
+    weights read-back, as SQL text. Returns ``(prefix, ids_ok,
+    overflow)``: the two shifted fields, the per-row range test and a
+    ``raise_error`` naming the bounds. pol has 4 bits and chan the rest
+    below the sign bit, at most 31; an out-of-range (or negative) id
+    would silently bleed into its neighboring field and alias another
+    plane's cell."""
     chan_max = (1 << min(64 - 1 - 4 - low_bits, 31)) - 1
-    ids_ok = ((F.col(pol) >= 0) & (F.col(pol) < 16)
-              & (F.col(chan) >= 0) & (F.col(chan) <= chan_max))
-    prefix = (F.shiftleft(F.col(chan).cast("long"), 4 + low_bits)
-              .bitwiseOR(F.shiftleft(F.col(pol).cast("long"), low_bits)))
-    overflow = F.raise_error(F.lit(
-        f"{what} packed key overflow: need 0 <= pol < 16 and "
-        f"0 <= chan <= {chan_max}"))
+    c, p = ident(chan), ident(pol)
+    ids_ok = sql_and(f"{p} >= 0", f"{p} < 16", f"{c} >= 0",
+                     f"{c} <= {chan_max}")
+    prefix = (f"shiftleft(CAST({c} AS BIGINT), {4 + low_bits}) | "
+              f"shiftleft(CAST({p} AS BIGINT), {low_bits})")
+    overflow = (f"raise_error('{what} packed key overflow: need "
+                f"0 <= pol < 16 and 0 <= chan <= {chan_max}')")
     return prefix, ids_ok, overflow
 
 
@@ -513,7 +546,7 @@ def _slab_salt_map(cnts: list[tuple[Hashable, int]], npart: int,
 def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
                         *, chan: str, pol: str,
                         n_planes: int | None,
-                        wn_col: Column,
+                        wn_sql: str,
                         salt_probe: bool = False) -> DataFrame:
     """The dense-planes gridder, cut for throughput (the CHILES tier):
 
@@ -542,7 +575,7 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
       support²) arrays plus per-call O(slab) zeroing saturate DRAM);
       the add.at/small-chunk form holds ~50M.
 
-    ``wn_col`` (weight·norm_u·norm_v) is summed per fat row inside the
+    ``wn_sql`` (weight·norm_u·norm_v) is summed per fat row inside the
     same aggregate, so each partial carries its ``sum_w_norm`` and the
     consumer needs no second pass over the visibilities.
 
@@ -569,22 +602,24 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     # fail fast on ids the bit layout can't hold (``_chan_pol_key``).
     # _u_c/_v_c are bounded by the in-bounds filter; du/dv by the
     # oversampling<=254 precondition of _pack_bits.
-    k, ids_ok, overflow = _chan_pol_key(chan, pol, bu + bv + 16,
-                                        "dense gridder")
-    k = (k.bitwiseOR(F.shiftleft(F.col("_u_c").cast("long"), bv + 16))
-         .bitwiseOR(F.shiftleft(F.col("_v_c").cast("long"), 16))
-         .bitwiseOR(F.shiftleft((F.col("_du") + F.lit(128)).cast("long"), 8))
-         .bitwiseOR((F.col("_dv") + F.lit(128)).cast("long")))
-    k = F.when(ids_ok, k).otherwise(overflow)
-    # Fused sum-of-weights (wn_col = weight·norm_u·norm_v, the codegen
+    prefix, ids_ok, overflow = _chan_pol_key(chan, pol, bu + bv + 16,
+                                             "dense gridder")
+    key = (f"{prefix} | shiftleft(CAST(_u_c AS BIGINT), {bv + 16}) "
+           f"| shiftleft(CAST(_v_c AS BIGINT), 16) "
+           f"| shiftleft(CAST(_du + 128 AS BIGINT), 8) "
+           f"| CAST(_dv + 128 AS BIGINT)")
+    # Fused sum-of-weights (wn_sql = weight·norm_u·norm_v, the codegen
     # LUT expression from grid_visibilities): summed map-side inside the
     # SAME groupBy that builds the fat rows, so the separate full-scan
     # sum_weight pass (measured ~2 s of the CHILES tier: it re-ran the
     # geometry exprs over 25.6M persisted rows) disappears. The struct
     # shipped through the shuffle is unchanged — only tiny per-group
     # partial sums ride along.
-    src = prepared.select(k.alias("_k"), F.col("_wd_re").alias("_wr"),
-                          F.col("_wd_im").alias("_wi"), wn_col.alias("_wn"))
+    src = prepared.select(
+        F.expr(f"CASE WHEN {ids_ok} THEN {key} ELSE {overflow} END")
+        .alias("_k"),
+        F.col("_wd_re").alias("_wr"), F.col("_wd_im").alias("_wi"),
+        F.expr(wn_sql).alias("_wn"))
     shipped = src.columns
     # one fat row per (chan, pol, u-slab) and INPUT PARTITION: the
     # group id and spark_partition_id() are computed before the one
@@ -597,7 +632,7 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     # count probed at build; every fat row of a group meets in one task,
     # which sums them into one slab partial before emitting.
     n_groups = max(1, int(n_planes or 1)) * max(1, n_u >> slab_log)
-    gkey = F.shiftrightunsigned(F.col("_k"), shift_group)
+    gkey = f"shiftrightunsigned(_k, {shift_group})"
     # Skew insurance (opt-in: one counting pass over the input at plan
     # build — cheap when the caller has the rows persisted, a full
     # recompute otherwise, hence not the default). Centrally-condensed
@@ -617,7 +652,7 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     hot: dict[int, int] = {}
     if salt_probe and n_groups <= 65536:
         cnts = [(int(r["_g"]), int(r["count"]))
-                for r in src.groupBy(gkey.alias("_g")).count().collect()]
+                for r in src.groupBy(F.expr(gkey).alias("_g")).count().collect()]
         hot = _slab_salt_map(cnts, p, cap_rows=(64 << 20) // 48)
     if hot:
         # per-group salt factor via a BROADCAST join, never an inline
@@ -625,11 +660,10 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         # falls out of whole-stage codegen into interpreted eval
         # (measured 6x slower on the skewed CHILES tier — the exact
         # cliff this valve exists to prevent)
-        hot_df = spark.createDataFrame(list(hot.items()),
-                                       schema="_hg bigint, _hsub int")
-        src = (src.withColumn("_g0", gkey)
-               .join(F.broadcast(hot_df),
-                     F.col("_g0") == F.col("_hg"), "left"))
+        hot_df = local_frame(spark, list(hot.items()),
+                             "_hg bigint, _hsub int")
+        src = (src.withColumn("_g0", F.expr(gkey))
+               .join(F.broadcast(hot_df), F.expr("_g0 = _hg"), "left"))
         # hash the VALUES along with the key: rows of one hot uv cell
         # share _k, so a key-only hash would put the whole cell in one
         # sub-bucket and the straggler would survive salting; value
@@ -637,17 +671,15 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         # split across partials is exact by construction). Cold rows
         # skip the 3-column hash entirely (lazy CASE branch) — with a
         # handful of hot groups the toll must not land on every row.
-        gkey = (F.col("_g0") * F.lit(max(hot.values()))
-                + F.when(F.col("_hsub").isNotNull(),
-                         F.pmod(F.xxhash64("_k", "_wr", "_wi"),
-                                F.col("_hsub")))
-                .otherwise(F.lit(0).cast("long")))
-    src = (src.select(*shipped, gkey.alias("_g"),
-                      F.spark_partition_id().alias("_pid"))
+        gkey = (f"_g0 * {max(hot.values())} + CASE WHEN _hsub IS NOT NULL "
+                f"THEN pmod(xxhash64(_k, _wr, _wi), _hsub) "
+                f"ELSE CAST(0 AS BIGINT) END")
+    src = (src.select(*shipped, F.expr(gkey).alias("_g"),
+                      F.expr("spark_partition_id()").alias("_pid"))
            .repartition(p, "_g")
            .groupBy("_g", "_pid")
-           .agg(F.collect_list(F.struct("_k", "_wr", "_wi")).alias("_rows"),
-                F.sum("_wn").alias("_wn")))
+           .agg(F.expr("collect_list(struct(_k, _wr, _wi))").alias("_rows"),
+                F.expr("sum(_wn)").alias("_wn")))
 
     # (256, support) LUT over the packed du byte; indices past the
     # half-kernel table are unreachable for valid data — zero them

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cngi_prototype_spark.functions.lits import local_frame
 from cngi_prototype_spark.imaging.grid import C_M_S, GridParms, _scaled_pos
 from cngi_prototype_spark.imaging.image import image_from_grid
 from cngi_prototype_spark.imaging.kernels import airy_disk, pswf
@@ -185,9 +186,12 @@ def apply_phase_gradient(
              .withColumn("_mf", F.element_at(mmap, F.col(field))))
     else:
         spark = vis_df.sparkSession
-        lut = F.broadcast(spark.createDataFrame(
+        lut = F.broadcast(local_frame(
+            spark,
             [(int(k), float(l), float(m)) for k, (l, m) in sorted(field_offsets.items())],
-            [field, "_lf", "_mf"]))
+            T.StructType([T.StructField(field, T.LongType()),
+                          T.StructField("_lf", T.DoubleType()),
+                          T.StructField("_mf", T.DoubleType())])))
         j = vis_df.join(lut, field, "left")
     u_l = F.col(u) * F.col(freq) / F.lit(C_M_S)
     v_l = F.col(v) * F.col(freq) / F.lit(C_M_S)
@@ -247,7 +251,7 @@ def mosaic_grid_visibilities(
         T.StructField("sw", T.DoubleType()),
     ])
 
-    u_pos, v_pos = _scaled_pos(gp, F.col(u), F.col(v), F.col(freq))
+    u_pos, v_pos = _scaled_pos(gp, u, v, freq)
     if baseline not in vis_df.columns:
         vis_df = vis_df.withColumn(baseline, F.lit(0))
     if re is None:  # PSF mode: the weight IS the gridded quantity
@@ -256,7 +260,7 @@ def mosaic_grid_visibilities(
         wre_col = F.col(re) * F.col(weight)
         wim_col = F.col(im) * F.col(weight)
     prepared = (vis_df
-                .withColumn("_up", u_pos).withColumn("_vp", v_pos)
+                .withColumns({"_up": F.expr(u_pos), "_vp": F.expr(v_pos)})
                 .select(baseline, chan, pol, "_up", "_vp",
                         F.col(weight).alias("_w"),
                         wre_col.alias("_wre"), wim_col.alias("_wim"))

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cngi_prototype_spark.functions.lits import local_frame
 from cngi_prototype_spark.imaging.planes import plane_arrays
 
 
@@ -299,9 +300,9 @@ def deconvolve_multiterm_clean(
     # shuffle carries 5 doubles per pixel instead of the nchan cube,
     # and no task ever materializes more than 5 image planes.
     spark = image_df.sparkSession
-    wdf = spark.createDataFrame(
-        [(int(c), (float(f) - nu0) / nu0) for c, f in freq_items],
-        schema=f"{chan} int, _w double")
+    wdf = local_frame(
+        spark, [(int(c), (float(f) - nu0) / nu0) for c, f in freq_items],
+        f"{chan} int, _w double")
     # LEFT join + raise on a missing weight: an inner join would
     # silently drop data channels absent from freqs and return Taylor
     # maps computed from a partial cube (the pre-refactor cube path
@@ -397,9 +398,10 @@ def evaluate_taylor_to_cube(taylor_df: DataFrame, freqs: dict[int, float],
     # channel-sorted mean, matching mtmfs_cube's nu0 bit-for-bit (dict
     # insertion order would shift the sum by an ulp)
     nu0 = float(np.array([freqs[c] for c in sorted(freqs)]).mean())
-    chans = spark.createDataFrame(
+    chans = local_frame(
+        spark,
         [(int(c), (float(f) - nu0) / nu0) for c, f in sorted(freqs.items())],
-        schema="chan int, omega double")
+        "chan int, omega double")
     t0 = (taylor_df.filter(F.col("term") == 0)
           .select(pol, "l_idx", "m_idx", F.col("model").alias("_m0")))
     t1 = (taylor_df.filter(F.col("term") == 1)

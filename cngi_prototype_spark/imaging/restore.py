@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from cngi_prototype_spark.functions.lits import local_frame
 from cngi_prototype_spark.imaging.image_ops import beam_abc
 
 
@@ -223,9 +224,9 @@ def linear_mosaic(
     if plane_keys is None:
         plane_keys = tuple(k for k in ("chan", "pol") if k in df.columns)
     if isinstance(offsets, dict):
-        offsets = spark.createDataFrame(
-            [(int(k), int(v[0]), int(v[1])) for k, v in offsets.items()],
-            schema=f"{field} int, off_l int, off_m int")
+        offsets = local_frame(
+            spark, [(int(k), int(v[0]), int(v[1])) for k, v in offsets.items()],
+            f"{field} int, off_l int, off_m int")
 
     keys = [*plane_keys, "l_idx", "m_idx"]
     shifted = (df.join(F.broadcast(offsets), on=field, how="inner")

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cngi_prototype_spark.functions.exact import dsum, sql_dsum
+from cngi_prototype_spark.functions.lits import local_frame
 
 C_M_S = 299792458.0
 
@@ -51,13 +52,12 @@ def lambda_sq_offsets(freqs: dict[int, float]) -> tuple[np.ndarray, float]:
 def _chan_phase_df(spark, freqs: dict[int, float]) -> DataFrame:
     lam2, l20 = lambda_sq_offsets(freqs)
     rows = [(int(c), float(d)) for c, d in zip(sorted(freqs), lam2 - l20)]
-    return spark.createDataFrame(rows, schema="chan int, dlam2 double")
+    return local_frame(spark, rows, "chan int, dlam2 double")
 
 
 def _phi_df(spark, phi_grid: list[float]) -> DataFrame:
-    return spark.createDataFrame(
-        [(i, float(p)) for i, p in enumerate(phi_grid)],
-        schema="phi_idx int, phi double")
+    return local_frame(spark, [(i, float(p)) for i, p in enumerate(phi_grid)],
+                       "phi_idx int, phi double")
 
 
 def faraday_depth_transform(

@@ -26,6 +26,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cngi_prototype_spark.functions.lits import local_frame
+
 C_M_S = 299792458.0
 
 
@@ -78,6 +80,7 @@ def _parms_rows(parms: dict[int, tuple[np.ndarray, np.ndarray]]) -> list[tuple]:
 _PARM_COLS = ["field_id",
               "m00", "m01", "m02", "m10", "m11", "m12", "m20", "m21", "m22",
               "p0", "p1", "p2"]
+_PARM_SCHEMA = ", ".join(["field_id bigint", *(f"{c} double" for c in _PARM_COLS[1:])])
 
 
 def direction_rotate(
@@ -96,7 +99,7 @@ def direction_rotate(
     spark = SparkSession.getActiveSession()
     parms = rotation_parms(field_centers, new_phase_center,
                            common_tangent_reprojection)
-    lut = F.broadcast(spark.createDataFrame(_parms_rows(parms), _PARM_COLS))
+    lut = F.broadcast(local_frame(spark, _parms_rows(parms), _PARM_SCHEMA))
 
     j = df.join(lut, on=df[field] == lut["field_id"], how="inner").drop(lut["field_id"])
     cu, cv, cw = F.col(u), F.col(v), F.col(w)

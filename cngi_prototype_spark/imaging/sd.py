@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cngi_prototype_spark.functions.exact import dsum, sql_dsum
+from cngi_prototype_spark.functions.lits import local_frame
 
 C_M_S = 299792458.0
 _FWHM_TO_SIGMA = 1.0 / (2.0 * math.sqrt(2.0 * math.log(2.0)))
@@ -155,9 +156,8 @@ def make_sd_psf(
     lat = spark.range(n_l * n_m).select(
         (F.col("id") / n_m).cast("int").alias("l_idx"),
         (F.col("id") % n_m).cast("int").alias("m_idx"))
-    chans = spark.createDataFrame(
-        [(i, float(f)) for i, f in enumerate(freq_chan)],
-        schema="chan int, freq double")
+    chans = local_frame(spark, [(i, float(f)) for i, f in enumerate(freq_chan)],
+                        "chan int, freq double")
     cl, cm = n_l // 2, n_m // 2
     out = lat.crossJoin(F.broadcast(chans))
     fwhm = F.lit(1.02 * C_M_S / dish_diameter) / F.col("freq")

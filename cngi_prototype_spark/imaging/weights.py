@@ -34,29 +34,31 @@ whole plan stays in whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cngi_prototype_spark.imaging.grid import C_M_S, GridParms, _chan_pol_key
+from cngi_prototype_spark.functions.lits import _d, ident, sql_and
+from cngi_prototype_spark.imaging.grid import C_M_S, GridParms, _chan_pol_key, _scaled_uv
 
 # grid side is broadcast when the padded uv-plane cell count is below this
 _BROADCAST_CELLS = 4_000_000
 
 
-def _cell_cols(gp: GridParms, u: Column, v: Column, freq: Column):
+def _cell_cols(gp: GridParms, u: str, v: str, freq: str):
     """Center cell and conjugate cell for a 1-tap (support=1) kernel
-    (SG:488-497: int(pos + 0.5), conjugate at -scaled + center)."""
-    u_s = u * (-(freq * F.lit(gp.cell_u) * F.lit(float(gp.n_u))) / F.lit(C_M_S))
-    v_s = v * (-(freq * F.lit(gp.cell_v) * F.lit(float(gp.n_v))) / F.lit(C_M_S))
-    cu = F.floor(u_s + F.lit(float(gp.n_u // 2)) + F.lit(0.5)).cast("int")
-    cv = F.floor(v_s + F.lit(float(gp.n_v // 2)) + F.lit(0.5)).cast("int")
-    ccu = F.floor(-u_s + F.lit(float(gp.n_u // 2)) + F.lit(0.5)).cast("int")
-    ccv = F.floor(-v_s + F.lit(float(gp.n_v // 2)) + F.lit(0.5)).cast("int")
-    return cu, cv, ccu, ccv
+    (SG:488-497: int(pos + 0.5), conjugate at -scaled + center), as SQL
+    text ``(cu, cv, ccu, ccv)``."""
+    su, sv = _scaled_uv(gp, u, v, freq)
+    hu, hv, h = _d(gp.n_u // 2), _d(gp.n_v // 2), _d(0.5)
+    return (f"CAST(floor({su} + {hu} + {h}) AS INT)",
+            f"CAST(floor({sv} + {hv} + {h}) AS INT)",
+            f"CAST(floor(-({su}) + {hu} + {h}) AS INT)",
+            f"CAST(floor(-({sv}) + {hv} + {h}) AS INT)")
 
 
-def _in_bounds(gp: GridParms, cu: Column, cv: Column) -> Column:
-    return (cu >= 0) & (cu < gp.n_u) & (cv >= 0) & (cv < gp.n_v)
+def _in_bounds(gp: GridParms, cu: str, cv: str) -> str:
+    return sql_and(f"{cu} >= 0", f"{cu} < {gp.n_u}", f"{cv} >= 0",
+                   f"{cv} < {gp.n_v}")
 
 
 def grid_weights(df: DataFrame, gp: GridParms, *, u: str = "u", v: str = "v",
@@ -69,25 +71,24 @@ def grid_weights(df: DataFrame, gp: GridParms, *, u: str = "u", v: str = "v",
     table twice per grid build); the in-bounds filter, group keys and
     sums see the identical multiset, so ``grid_w`` is bit-identical.
     """
-    cu, cv, ccu, ccv = _cell_cols(gp, F.col(u), F.col(v), F.col(freq))
-    base = df.filter(F.col(weight).isNotNull() & (F.col(weight) != 0))
-    arms = base.select(
-        F.col(chan), F.col(pol), F.col(weight).alias("_w"),
-        F.explode(F.array(
-            F.struct(cu.alias("u_idx"), cv.alias("v_idx")),
-            F.struct(ccu.alias("u_idx"), ccv.alias("v_idx")))).alias("_c"))
+    cu, cv, ccu, ccv = _cell_cols(gp, u, v, freq)
+    w = ident(weight)
+    arms = df.filter(F.expr(f"{w} IS NOT NULL AND {w} != 0")).select(
+        F.col(chan), F.col(pol), F.expr(w).alias("_w"),
+        F.expr(f"explode(array(struct({cu} AS u_idx, {cv} AS v_idx), "
+               f"struct({ccu} AS u_idx, {ccv} AS v_idx)))").alias("_c"))
     return (arms.select(chan, pol, F.col("_c.u_idx").alias("u_idx"),
                         F.col("_c.v_idx").alias("v_idx"), "_w")
-            .filter(_in_bounds(gp, F.col("u_idx"), F.col("v_idx")))
+            .filter(F.expr(_in_bounds(gp, "u_idx", "v_idx")))
             .groupBy(chan, pol, "u_idx", "v_idx")
             .agg(F.sum("_w").alias("grid_w")))
 
 
 def _factors(weighting: str, robust: float, briggs_abs_noise: float,
-             sum_w: Column, sum_sq: Column) -> tuple[Column, Column]:
-    """Per-(chan,pol) ``(f1, f2)`` (make_imaging_weight.py:199-213) from
-    the plane's ``Σ grid_w`` and ``Σ grid_w²``; raises on an unknown
-    weighting before anything is built.
+             sum_w: str, sum_sq: str) -> tuple[str, str]:
+    """Per-(chan,pol) ``(f1, f2)`` (make_imaging_weight.py:199-213) as
+    SQL text, from the plane's ``Σ grid_w`` and ``Σ grid_w²``; raises on
+    an unknown weighting before anything is built.
 
     ``sum_weight`` for the 1-tap imaging-weight grid is ``2·Σw``, which
     equals ``Σ_cells grid_w`` — both scatter arms land in bounds for any
@@ -95,13 +96,12 @@ def _factors(weighting: str, robust: float, briggs_abs_noise: float,
     double-accumulation (SG:358-366 with do_imaging_weight).
     """
     if weighting == "briggs":
-        f1 = F.lit(float(5.0 * 10.0 ** (-robust)) ** 2) * sum_w / sum_sq
-        return f1, F.lit(1.0)
+        f1 = f"{_d((5.0 * 10.0 ** (-robust)) ** 2)} * {sum_w} / {sum_sq}"
+        return f1, _d(1.0)
     if weighting == "briggs_abs":
-        return (F.lit(float(robust) ** 2),
-                F.lit(2.0 * float(briggs_abs_noise) ** 2))
+        return _d(float(robust) ** 2), _d(2.0 * float(briggs_abs_noise) ** 2)
     if weighting == "uniform":
-        return F.lit(1.0), F.lit(0.0)
+        return _d(1.0), _d(0.0)
     raise ValueError(f"unknown weighting: {weighting}")
 
 
@@ -124,14 +124,15 @@ def make_imaging_weight(
 
     natural → the input weight is the imaging weight
     (make_imaging_weight.py:96-104); otherwise grid/factor/degrid.
+    Every derived column is one parsed SQL expression
+    (``functions/lits.py``'s build-cost rules).
     """
     if weighting == "natural":
         return df.withColumn(out, F.col(weight))
 
-    plane = Window.partitionBy(chan, pol)
+    plane = f"OVER (PARTITION BY {ident(chan)}, {ident(pol)})"
     f1, f2 = _factors(weighting, robust, briggs_abs_noise,
-                      F.sum("grid_w").over(plane),
-                      F.sum(F.col("grid_w") * F.col("grid_w")).over(plane))
+                      f"sum(grid_w) {plane}", f"sum(grid_w * grid_w) {plane}")
     # one long key, chan | pol | u_idx | v_idx, so Spark builds a
     # LongHashedRelation (four int keys overflow its 8-byte packing and
     # fall back to an UnsafeHashedRelation around a whole memory page).
@@ -147,35 +148,34 @@ def make_imaging_weight(
     prefix, ids_ok, overflow = _chan_pol_key(chan, pol, bu + bv,
                                              "imaging weight")
 
-    def cell_key(cu: Column, cv: Column) -> Column:
-        return (prefix.bitwiseOR(F.shiftleft(cu.cast("long"), bv))
-                .bitwiseOR(cv.cast("long")))
+    def cell_key(cu: str, cv: str) -> str:
+        return (f"{prefix} | shiftleft(CAST({cu} AS BIGINT), {bv}) "
+                f"| CAST({cv} AS BIGINT)")
 
     g = (grid_weights(df, gp, u=u, v=v, freq=freq, weight=weight, chan=chan,
                       pol=pol)
-         .select(F.coalesce(cell_key(F.col("u_idx"), F.col("v_idx")),
-                            F.lit(-1).cast("long")).alias("_gk"),
-                 F.when(F.col("grid_w") != 0, f1 * F.col("grid_w") + f2)
-                 .alias("_den")))
+         .select(F.expr(f"coalesce({cell_key('u_idx', 'v_idx')}, "
+                        f"CAST(-1 AS BIGINT))").alias("_gk"),
+                 F.expr(f"CASE WHEN grid_w != 0 THEN ({f1}) * grid_w + ({f2}) "
+                        f"END").alias("_den")))
     if gp.n_u * gp.n_v <= _BROADCAST_CELLS:
         g = F.broadcast(g)
 
     # the id range is checked on every vis row, which covers the grid:
     # each grid row's (chan, pol) comes from a vis row. Out-of-bounds
     # cells and null ids get a null key and keep their weight.
-    cu, cv, _, _ = _cell_cols(gp, F.col(u), F.col(v), F.col(freq))
-    vis = df.withColumn("_cu", cu).withColumn("_cv", cv)
-    vk = (F.when(~ids_ok, overflow)
-          .when(_in_bounds(gp, F.col("_cu"), F.col("_cv")),
-                cell_key(F.col("_cu"), F.col("_cv"))))
-    joined = vis.withColumn("_k", vk).join(
-        g, F.col("_k") == F.col("_gk"), how="left")
+    cu, cv, _, _ = _cell_cols(gp, u, v, freq)
+    vis = df.withColumns({"_cu": F.expr(cu), "_cv": F.expr(cv)})
+    vk = (f"CASE WHEN NOT ({ids_ok}) THEN {overflow} "
+          f"WHEN {_in_bounds(gp, '_cu', '_cv')} THEN {cell_key('_cu', '_cv')} END")
+    joined = vis.withColumn("_k", F.expr(vk)).join(
+        g, F.expr("_k = _gk"), how="left")
     # degrid read-back (SG:530-546): empty/NaN sample or empty cell ->
     # weight; _den is null outside a matched, nonzero cell
-    usable = (F.col(weight).isNotNull() & (F.col(weight) != 0)
-              & F.col("_den").isNotNull())
-    iw = F.when(usable, F.col(weight) / F.col("_den")).otherwise(F.col(weight))
-    return (joined.withColumn(out, iw)
+    w = ident(weight)
+    usable = sql_and(f"{w} IS NOT NULL", f"{w} != 0", "_den IS NOT NULL")
+    iw = f"CASE WHEN {usable} THEN {w} / _den ELSE {w} END"
+    return (joined.withColumn(out, F.expr(iw))
             .drop("_cu", "_cv", "_k", "_gk", "_den"))
 
 

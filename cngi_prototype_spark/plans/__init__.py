@@ -1,5 +1,6 @@
 from cngi_prototype_spark.plans.inspect import (  # noqa: F401
     broadcast_hint_count,
+    build_cost,
     build_jobs,
     count_exchanges,
     explain_formatted,

@@ -26,7 +26,9 @@ Everything else is recorded as evidence, not judged: exchange count,
 broadcast-hint count, pushed-filter strings, per-scan read widths, and
 ``build_jobs`` — the Spark jobs the query's builder launched (parquet
 schema reads included), so "builders launch no undeclared jobs" reads
-off the committed report.
+off the committed report — and ``build_jvm_calls``, the py4j commands
+the builder sent (its Python -> JVM round trips, the other half of
+plan-build cost).
 
 ``build_jobs`` is exact only at zero. A builder that runs an eager
 action (a ``localCheckpoint``, a ``count``) runs it through adaptive
@@ -55,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cngi_prototype_spark.plans.inspect import (
     broadcast_hint_count,
-    build_jobs,
+    build_cost,
     count_exchanges,
     explain_formatted,
 )
@@ -173,9 +175,9 @@ def audit_registry(spark: SparkSession, sf_dir: str,
         if only and qname not in only:
             continue
         try:
-            df, jobs = build_jobs(spark, lambda: fn(spark, sf_dir))
+            df, jobs, calls = build_cost(spark, lambda: fn(spark, sf_dir))
             report[qname] = {**audit_df(df, widths, name=qname),
-                             "build_jobs": jobs}
+                             "build_jobs": jobs, "build_jvm_calls": calls}
         except Exception as e:  # noqa: BLE001 — report, don't die
             report[qname] = {"error": f"{type(e).__name__}: {e}"[:200],
                              "violations": ["build_error"]}

@@ -54,28 +54,50 @@ def broadcast_hint_count(df: DataFrame) -> int:
     return len(re.findall(r"ResolvedHint \(strategy=broadcast\)", plan))
 
 
-def build_jobs(spark, fn: Callable[[], Any]) -> tuple[Any, int]:
+def build_cost(spark, fn: Callable[[], Any]) -> tuple[Any, int, int]:
     """Call the builder ``fn()`` under a fresh job group and return
-    ``(its result, the number of Spark jobs it launched)``.
+    ``(its result, the Spark jobs it launched, the py4j commands it
+    sent)``.
 
-    A builder should only describe work; a nonzero count means it ran
-    some eagerly (a checkpoint, a count, a partition-count probe that
-    materializes adaptive query stages). The caller's job group is
-    restored afterwards.
+    A builder should only describe work; a nonzero job count means it
+    ran some eagerly (a checkpoint, a count, a partition-count probe
+    that materializes adaptive query stages). The command count is the
+    builder's Python -> JVM round trips (every Column operator and
+    ``functions`` call costs several, see ``functions/lits.py``),
+    counted on the session's gateway client for the call only. The
+    caller's job group is restored afterwards.
     """
     sc = spark.sparkContext
     group = f"build_jobs.{uuid.uuid4().hex}"
     prev = (sc.getLocalProperty("spark.jobGroup.id"),
             sc.getLocalProperty("spark.job.description"))
     sc.setJobGroup(group, "plan build")
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    sent = 0
+
+    def counted(*args, **kwargs):
+        nonlocal sent
+        sent += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counted
     try:
         out = fn()
     finally:
+        client.send_command = send
         sc.setLocalProperty("spark.jobGroup.id", prev[0])
         sc.setLocalProperty("spark.job.description", prev[1])
     # the status tracker is fed by the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group)), sent
+
+
+def build_jobs(spark, fn: Callable[[], Any]) -> tuple[Any, int]:
+    """``(fn(), the Spark jobs it launched)`` — :func:`build_cost`
+    without the command count."""
+    out, jobs, _ = build_cost(spark, fn)
+    return out, jobs
 
 
 def shuffle_totals(spark) -> dict[str, int] | None:

@@ -358,8 +358,8 @@ def token_frequencies(
     g = g.withColumn("_pfx", F.substring("token", 1, 2))
     # r14: the bucket-size branch below is DERIVED from g, and without
     # a materialization Catalyst re-plans the whole corpus tokenize +
-    # count for it (two scans, two corpus aggregations — measured in
-    # plans/r14/token_frequencies_before.txt). g is vocabulary-sized
+    # count for it (two scans and two corpus aggregations in the
+    # un-checkpointed plan's explain output). g is vocabulary-sized
     # (Heaps' law, ≪ corpus), so an eager localCheckpoint is a bounded
     # materialization that cuts the corpus work to one pass.
     g = g.localCheckpoint()

@@ -271,6 +271,26 @@ def test_dense_planes_unpackable_raises_at_build(spark):
     assert build_jobs(spark, build)[1] == 0
 
 
+def test_dense_gridder_pol_overflow_raises(spark, vis_pdf):
+    """pol must fit the packed key's 4 bits: pol=16 fails the dense
+    gridder's run with the message naming the bounds."""
+    from pyspark.errors import PySparkException
+
+    from cngi_prototype_spark.imaging.image import make_image
+
+    pdf = vis_pdf.copy()
+    pdf.loc[7, "pol"] = 16
+    gp = GridParms(n_u=32, n_v=32, cell_u=2.0e-5, cell_v=2.0e-5,
+                   support=3, oversampling=10)
+    planes = make_image(spark.createDataFrame(pdf), gp, image_size=(16, 16),
+                        weight="weight", variant="kernel", n_planes=4,
+                        output="planes")
+    with pytest.raises(PySparkException,
+                       match=r"dense gridder packed key overflow: need "
+                             r"0 <= pol < 16 and 0 <= chan <= \d+"):
+        planes.collect()
+
+
 def test_fused_sumw_matches_standalone(spark, vis_pdf):
     """r14: ``fuse_sumw=True`` replaces the standalone sum-of-weights
     pass with per-cell center-tap partials EMBEDDED in the grid rows

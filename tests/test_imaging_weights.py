@@ -106,6 +106,59 @@ def test_imaging_builders_launch_no_jobs(spark, vis_pdf, weighting):
     assert len(planes.toPandas()) == 4
 
 
+# the dense-planes image grid of the builder tests below
+GP_IMG = GridParms(n_u=32, n_v=32, cell_u=2.0e-5, cell_v=2.0e-5, support=3,
+                   oversampling=10)
+
+
+def _briggs_planes(df, **names):
+    from cngi_prototype_spark.imaging.image import make_image
+
+    weighted = make_imaging_weight(df, GP, weighting="briggs", robust=0.5,
+                                   **names)
+    u = {"u": names["u"]} if "u" in names else {}
+    planes = make_image(weighted, GP_IMG, image_size=(16, 16),
+                        weight="imaging_weight", variant="kernel",
+                        n_planes=4, output="planes", **u)
+    return weighted, planes
+
+
+def test_imaging_builders_jvm_round_trips(spark, vis_pdf):
+    """Briggs weights + the dense-planes image build in at most 1,500
+    py4j commands and no Spark job. Spelled as Column operator chains
+    (each call wrapped in PySpark's call-site tracking) the same build
+    sent about 4,100."""
+    from cngi_prototype_spark.plans import build_cost
+
+    df = spark.createDataFrame(vis_pdf.assign(
+        data_re=1.0, data_im=0.0)).repartition(3)
+    (_, planes), jobs, calls = build_cost(spark, lambda: _briggs_planes(df))
+    assert jobs == 0
+    assert calls <= 1500, calls
+    assert len(planes.toPandas()) == 4
+
+
+def test_column_names_are_quoted_into_the_builders(spark, vis_pdf):
+    """Names reach the builders' SQL text through ``lits.ident``: a u
+    column named `` `select` `` (backticks included) and a weight
+    named ``w eight`` give the plain-name run's weights and planes."""
+    base = vis_pdf.assign(data_re=1.0, data_im=0.0)
+
+    def run(pdf, **names):
+        weighted, planes = _briggs_planes(spark.createDataFrame(pdf), **names)
+        iw = (weighted.select("rid", "imaging_weight").toPandas()
+              .sort_values("rid")["imaging_weight"].to_numpy())
+        return iw, planes.toPandas().sort_values(["chan", "pol"])
+
+    iw0, p0 = run(base)
+    iw1, p1 = run(base.rename(columns={"u": "`select`", "weight": "w eight"}),
+                  u="`select`", weight="w eight")
+    np.testing.assert_allclose(iw1, iw0, rtol=1e-12)
+    assert len(p1) == len(p0) == 4
+    for a, b in zip(p0.image, p1.image):
+        np.testing.assert_allclose(b, a, rtol=1e-12, atol=1e-15)
+
+
 def test_unknown_weighting_raises_before_building(spark, vis_pdf):
     from cngi_prototype_spark.plans import build_jobs
 

@@ -1,13 +1,14 @@
 """One-call array literals: exact values, empty input and non-finite
 values all type as arrays of DOUBLE. Driver-built tables plan as a
-LocalRelation and keep their values exactly."""
+LocalRelation and keep their values exactly. SQL-text helpers quote
+any column name and build the Column API's expression trees."""
 
 from __future__ import annotations
 
 import math
 
 from cngi_prototype_spark.functions.lits import (flit_arr, flit_arr2d,
-                                                 local_frame)
+                                                 ident, local_frame, sql_and)
 
 
 def _one(spark, col):
@@ -68,3 +69,32 @@ def test_local_frame_empty_keeps_schema(spark):
     assert _plan_class(df) == "LocalRelation"
     assert df.schema == schema
     assert df.collect() == []
+
+
+def test_ident_reads_any_name_back(spark):
+    from pyspark.sql import functions as F
+
+    names = ["w eight", "select", "`select`", "a`b", "a.b"]
+    assert ident("a`b") == "`a``b`"
+    df = spark.range(1).select(*[F.lit(i).alias(n)
+                                 for i, n in enumerate(names)])
+    row = df.select(*[F.expr(ident(n)) for n in names]).first()
+    assert list(row) == list(range(len(names)))
+
+
+def test_sql_and_builds_the_column_chain(spark):
+    """A Column ``&`` chain nests left-deep; the parser balances a bare
+    ``a AND b AND c AND d``. ``sql_and`` gives the Column tree."""
+    from pyspark.sql import functions as F
+
+    terms = ["id >= 0", "id < 9", "id != 3", "id != 4"]
+    col = ((F.col("id") >= 0) & (F.col("id") < 9) & (F.col("id") != 3)
+           & (F.col("id") != 4))
+
+    df = spark.range(1)
+
+    def tree(c):
+        return df.filter(c)._jdf.queryExecution().analyzed().toString()
+
+    assert tree(F.expr(sql_and(*terms))) == tree(col)
+    assert tree(F.expr(" AND ".join(terms))) != tree(col)

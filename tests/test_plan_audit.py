@@ -75,8 +75,12 @@ def test_registry_subset_clean(spark):
     report = audit_registry(spark, SF_DIR, only=SUBSET)
     assert report["n_queries"] == len(SUBSET)
     assert report["violations"] == {}, report["violations"]
-    # builder jobs are evidence, recorded for every query
+    # builder jobs and py4j round trips are evidence, recorded for
+    # every query (every builder sends at least one command)
     assert all(isinstance(q["build_jobs"], int) and q["build_jobs"] >= 0
+               for q in report["queries"].values())
+    assert all(isinstance(q["build_jvm_calls"], int)
+               and q["build_jvm_calls"] > 0
                for q in report["queries"].values())
 
 

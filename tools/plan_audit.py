@@ -31,7 +31,8 @@ def main() -> int:
         tag = "FAIL" if q["violations"] else "ok  "
         extra = (f" violations={q['violations']}" if q["violations"] else
                  f" exch={q.get('n_exchanges')} scans={len(q.get('scans', []))}"
-                 f" build_jobs={q.get('build_jobs')}")
+                 f" build_jobs={q.get('build_jobs')}"
+                 f" jvm_calls={q.get('build_jvm_calls')}")
         print(f"{tag} {qname}{extra}")
     print(f"{report['n_clean']}/{report['n_queries']} clean")
     if only is None:
