@@ -236,9 +236,11 @@ def ngram_jaccard_pairs(
       k times, bounded by ``max_bucket`` fan-out). Wins once the
       corpus dwarfs the candidate set (measured: 36 s vs 68 s at 500k
       docs — the 100x rung; the gap only widens with corpus size).
-    - None (default) — decide by one ``df.count()`` against the
-      measured ~200k-doc crossover. Callers on a hot path with a
-      known corpus size should pass the bool and skip the count.
+    - None (default) — decide by Catalyst's size estimate
+      (``estimated_size_bytes``, no job) against 24 MiB, the measured
+      ~200k-doc crossover at ~118 B/doc; an unavailable estimate takes
+      the per-pair branch. Callers that know their corpus size can
+      pass the bool.
 
     Rejected alternative: persisting the candidate set and semi-join
     restricting the shingle tables measured fastest of all, but

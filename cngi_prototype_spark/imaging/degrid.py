@@ -31,6 +31,7 @@ from cngi_prototype_spark.imaging.grid import (
     _cgk_at,
     _flit_arr,
     _geometry,
+    _kernel_lut,
     _on_grid,
     _slab_salt_map,
     _tap_explode,
@@ -193,14 +194,10 @@ def _degrid_kernel(
     decimals, nested types included).
     """
     W = int(slab_w)
-    half, support, ov = gp.half, gp.support, gp.oversampling
+    half, support = gp.half, gp.support
     n_v = gp.n_v
-    cgk = gp.kernel_1d()
     ius = np.arange(-half, support - half)
-    didx = np.arange(256)
-    raw = np.abs(ov * ius[None, :] + (didx[:, None] - 128))
-    lut = np.where(raw < len(cgk), cgk[np.minimum(raw, len(cgk) - 1)],
-                   0.0)
+    lut, r = _kernel_lut(gp)  # the gridder's table
 
     geom = (_geometry(vis_df, gp, u, v, freq)
             .withColumn("_ok", F.expr(_on_grid(gp))))
@@ -248,8 +245,8 @@ def _degrid_kernel(
                 + 1j * _np(gtab.column("grid_im"), np.float64)[keep])
         uc = _np(vtab.column("_u_c"), np.int64)
         vc = _np(vtab.column("_v_c"), np.int64)
-        fu = lut[_np(vtab.column("_du"), np.int64) + 128]  # (n, support)
-        fv = lut[_np(vtab.column("_dv"), np.int64) + 128]
+        fu = lut[_np(vtab.column("_du"), np.int64) + r]  # (n, support)
+        fv = lut[_np(vtab.column("_dv"), np.int64) + r]
         n = len(uc)
         acc = np.empty(n, np.complex128)
         norm = np.empty(n, np.float64)

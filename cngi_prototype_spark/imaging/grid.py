@@ -20,12 +20,20 @@ Two physical strategies, same semantics:
    (SG:58-120), but chosen adaptively by AQE instead of hand-built.
    Whole-stage codegen keeps the kernel-weight arithmetic JVM-side.
 
-2. ``variant="kernel"`` — numpy scatter in Python workers, two outputs:
+2. ``variant="kernel"`` — numpy scatter in Python workers. Two
+   outputs share one scatter core: per-axis kernel factors from one
+   LUT over the reachable fractional offsets (``_kernel_lut``, also
+   the dense degridder's) and one chunked ``np.add.at``
+   (``_lut_scatter``).
 
    - sparse cells (the default, and the ``precise`` gate mode):
-     ``mapInPandas`` builds a partial dense grid per partition, emits
-     its touched cells and combines them by the same final ``groupBy``
-     sum (``_kernel_variant``);
+     ``_kernel_cells`` scatters each input partition one (chan, pol)
+     plane at a time in a ``mapInArrow`` pass, emits the touched
+     cells (zero-sum ones included, as the explode groupBy does) and
+     combines them by the same final ``groupBy`` sum. chan and pol
+     travel as their own columns, so any integer id round-trips;
+     ``precise`` sums int64 quanta ``floor((cu·cv)·w·1e9)``, the
+     explode/oracle association, so the two variants are bit-equal;
    - dense planes (``dense_planes=True``, used by
      ``make_image(output="planes")``): the six small geometry integers
      pack into one int64 key, rows group JVM-side into one fat
@@ -39,9 +47,10 @@ Two physical strategies, same semantics:
      0.92-1.08 across bench runs; see bench.py imaging_chiles_frac)
      where sparse-cell emission was ~10x off and the earlier
      row-at-a-time Arrow feed ~3x off. Packing needs oversampling ≤
-     254 and a grid whose widest slab flat-indexes in int32 (every
-     grid up to 32768², see ``_pack_bits``); other shapes raise and
-     take ``output="cells"``.
+     254, ids with 0 ≤ pol < 16, and a grid whose widest slab
+     flat-indexes in int32 (every grid up to 32768², see
+     ``_pack_bits``); other inputs take the ``variant="kernel"``
+     sparse cells, which pack nothing.
 
 The per-visibility kernel normalization is separable
 (``Σ_{u,v} conv_u·conv_v = (Σ conv_u)(Σ conv_v)``), so the
@@ -54,11 +63,12 @@ enters multiplied by the *kernel* norm of taps actually applied.
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Hashable
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -192,6 +202,75 @@ def _cgk_at(cgk_lit: Column, ov: int, tap: int, off: Column) -> Column:
     return F.element_at(cgk_lit, F.abs(F.lit(ov * tap) + off) + 1)
 
 
+def _kernel_lut(gp: GridParms) -> tuple[np.ndarray, int]:
+    """Per-axis kernel factors of every reachable fractional offset:
+    ``lut[d + r, t + half] = cgk[|ov·t + d|]`` (SG:345-355) for
+    ``d ∈ [-r, r]``, ``r = ov//2 + 1`` — ``_du = floor((u_c - u_pos)·ov
+    + 0.5)`` with ``u_c - u_pos ∈ (-0.5, 0.5]``, so odd oversampling
+    reaches ``ov//2 + 1``. Taps past the half-kernel table read 0.0
+    (only tiny oversampling reaches them). Returns ``(lut, r)``; the
+    one table of the sum-of-weights norms, both kernel-gridder
+    outputs and the dense degridder."""
+    r = gp.oversampling // 2 + 1
+    cgk = gp.kernel_1d()
+    taps = np.arange(-gp.half, gp.support - gp.half)
+    raw = np.abs(gp.oversampling * taps[None, :]
+                 + np.arange(-r, r + 1)[:, None])
+    return np.where(raw < len(cgk), cgk[np.minimum(raw, len(cgk) - 1)],
+                    0.0), r
+
+
+def _lut_scatter(support: int, chunk: int = 1024):
+    """The kernel gridder's one scatter, as a closure built on the
+    driver — cloudpickle ships it by value, so a Python worker never
+    imports this package. Returns ``scatter(fg, base, cu, cv, w, off,
+    touch=None)``, which adds every row's support² kernel taps into the
+    flat plane ``fg``: tap (iu, iv) of row i lands at ``base[i] +
+    off[iu·support + iv]`` with kernel factor ``cu[i, iu]·cv[i, iv]``
+    (``_kernel_lut`` rows of the row's offsets), one ``np.add.at`` per
+    ~1k-row chunk whose tap values and int32 indices stay
+    cache-resident (the buffers are allocated on first use, in the
+    worker).
+
+    A complex ``fg`` adds ``(cu·w)·cv`` for the complex weighted data
+    ``w`` — the production form: a complex times a real factor is
+    componentwise, so one complex add.at is bit-identical to separate
+    re/im adds and runs ~1.55x faster (175 vs 113 Mtaps/s
+    single-thread), the index decode + gather loop paid once for both
+    components. An int64 ``fg`` of shape (2, m) adds the quanta
+    ``floor(((cu·cv)·w)·1e9)`` of ``w``'s (2, n) re/im rows — the
+    explode/oracle association, so its integer sums are bit-equal to
+    the gate's. ``touch`` (bool, m) marks every cell a tap landed on,
+    zero-valued or not."""
+    bufs: list[np.ndarray] = []
+
+    def scatter(fg, base, cu, cv, w, off, touch=None):
+        if not bufs:
+            bufs.extend((np.empty((chunk, support), np.complex128),
+                         np.empty((chunk, support, support), np.complex128),
+                         np.empty((chunk, support * support), np.int32)))
+        cw_b, vz_b, idx_b = bufs
+        for c0 in range(0, len(base), chunk):
+            c1 = min(c0 + chunk, len(base))
+            nc = c1 - c0
+            idx = np.add(base[c0:c1, None], off[None, :],
+                         out=idx_b[:nc]).reshape(-1)
+            if fg.dtype == np.int64:
+                conv = cu[c0:c1, :, None] * cv[c0:c1, None, :]
+                for k in (0, 1):
+                    q = np.floor(conv * w[k, c0:c1, None, None] * 1.0e9)
+                    np.add.at(fg[k], idx, q.astype(np.int64).reshape(-1))
+            else:
+                cw = np.multiply(cu[c0:c1], w[c0:c1, None], out=cw_b[:nc])
+                vz = np.multiply(cw[:, :, None], cv[c0:c1, None, :],
+                                 out=vz_b[:nc])
+                np.add.at(fg, idx, vz.reshape(-1))
+            if touch is not None:
+                touch[idx] = True
+
+    return scatter
+
+
 def grid_visibilities(
     df: DataFrame,
     gp: GridParms,
@@ -318,23 +397,13 @@ def grid_visibilities(
     # array-literal index stays fully in codegen (~4.6 s). LUT values
     # accumulate left-to-right in Python — bit-identical to both the
     # previous Catalyst chain and the SQL twin's `+` chain. ---
-    # reachable offset range: _du = floor((u_c - u_pos)·ov + 0.5) with
-    # (u_c - u_pos) ∈ (-0.5, 0.5], so |_du| can reach ov//2 + 1 when
-    # oversampling is odd — size the LUT over the full reachable range
-    # (the extra cgk indices stay within the table: ov·half + ov//2 + 1
-    # ≤ ov·(half+1) for ov ≥ 2)
-    half_ov = gp.oversampling // 2 + 1
-    norm_vals = []
-    for off in range(-half_ov, half_ov + 1):
-        terms = [float(cgk[i]) if (i := abs(gp.oversampling * t + off)) < len(cgk) else 0.0
-                 for t in range(-gp.half, gp.support - gp.half)]
-        acc = terms[0]
-        for x in terms[1:]:
-            acc = acc + x
-        norm_vals.append(acc)
+    # the norm of offset d is row d + r of the shared kernel LUT
+    # (``_kernel_lut``: every reachable offset, out-of-table taps 0.0)
+    lut, r = _kernel_lut(gp)
+    norm_vals = [functools.reduce(operator.add, row) for row in lut.tolist()]
     norm_sql = _arr([_d(x) for x in norm_vals], "ARRAY<DOUBLE>")
-    nu_sql = f"element_at({norm_sql}, _du + {half_ov + 1})"
-    nv_sql = f"element_at({norm_sql}, _dv + {half_ov + 1})"
+    nu_sql = f"element_at({norm_sql}, _du + {r + 1})"
+    nv_sql = f"element_at({norm_sql}, _dv + {r + 1})"
 
     if variant == "kernel" and dense_planes:
         if precise:
@@ -348,7 +417,7 @@ def grid_visibilities(
         # make_image's planes path normalizes from the embedded
         # per-slab sums (wn reuses the codegen norm LUT above)
         wn_sql = f"{ident(weight)} * ({nu_sql} * {nv_sql})"
-        return _dense_planes_arrow(prepared, gp, cgk, chan=chan, pol=pol,
+        return _dense_planes_arrow(prepared, gp, lut, chan=chan, pol=pol,
                                    n_planes=n_planes, wn_sql=wn_sql,
                                    salt_probe=salt_probe), None
 
@@ -467,8 +536,8 @@ def grid_visibilities(
         return grid, sum_weight
 
     if variant == "kernel":
-        return _kernel_variant(prepared, gp, cgk, chan=chan, pol=pol,
-                               precise=precise), sum_weight
+        return _kernel_cells(prepared, gp, lut, chan=chan, pol=pol,
+                             precise=precise), sum_weight
 
     raise ValueError(f"unknown gridder variant: {variant}")
 
@@ -476,9 +545,10 @@ def grid_visibilities(
 def _pack_bits(gp: GridParms) -> tuple[int, int] | None:
     """Bit budget for the packed-key dense fast path: returns
     ``(bu, bv)`` (bits for u_c / v_c) or None when the grid shape can't
-    pack. Layout (low→high, sign bit clear): dv+128 (8) | du+128 (8) |
-    v_c (bv) | u_c (bu) | pol (4) | chan (the remaining 43-bu-bv).
-    Preconditions: oversampling ≤ 254 (|du| ≤ ov/2 + 1 < 128), at
+    pack. Layout (low→high, sign bit clear): dv+r (8) | du+r (8) |
+    v_c (bv) | u_c (bu) | pol (4) | chan (the remaining 43-bu-bv), with
+    r = ov//2 + 1 the ``_kernel_lut`` row offset.
+    Preconditions: oversampling ≤ 254 (du + r ∈ [1, 255]), at
     least one chan bit, and the widest slab — 2^bu rows plus the kernel
     halo — flat-indexes in int32, the scatter's index type. Any grid
     whose plane the FFT consumer can hold (≤ 16384², 4 GiB complex)
@@ -543,7 +613,7 @@ def _slab_salt_map(cnts: list[tuple[Hashable, int]], npart: int,
     return out
 
 
-def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
+def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, lut: np.ndarray,
                         *, chan: str, pol: str,
                         n_planes: int | None,
                         wn_sql: str,
@@ -565,11 +635,13 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     - ``mapInArrow`` hands the struct-list children straight to numpy
       (zero-copy), sums a slab's fat rows into one partial plane and
       emits the partials as Arrow ListArrays;
-    - the per-row 1-D kernel factors come from a (256, support) LUT
-      indexed by the packed du byte — one fancy-index gather per axis
-      replaces per-tap ``cgk[|ov·iu + du|]`` gathers — and the scatter
-      is one complex ``np.add.at`` over ~1k-row chunks whose tap-value
-      and index temporaries stay cache-resident (int32 indices).
+    - the per-row 1-D kernel factors come from the shared
+      ``_kernel_lut``, indexed directly by the packed ``du + r`` byte —
+      one fancy-index gather per axis replaces per-tap
+      ``cgk[|ov·iu + du|]`` gathers — and the scatter is
+      ``_lut_scatter``: one complex ``np.add.at`` over ~1k-row chunks
+      whose tap-value and index temporaries stay cache-resident (int32
+      indices).
       Measured at 32-way load: a per-tap bincount loop collapses from
       112M taps/s/core single-thread to ~20M (the materialized (chunk,
       support²) arrays plus per-call O(slab) zeroing saturate DRAM);
@@ -588,7 +660,7 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     bits = _pack_bits(gp)
     assert bits is not None
     bu, bv = bits
-    n_u, n_v, ov = gp.n_u, gp.n_v, gp.oversampling
+    n_u, n_v = gp.n_u, gp.n_v
     half, support = gp.half, gp.support
 
     spark = prepared.sparkSession
@@ -604,10 +676,11 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     # oversampling<=254 precondition of _pack_bits.
     prefix, ids_ok, overflow = _chan_pol_key(chan, pol, bu + bv + 16,
                                              "dense gridder")
+    r = len(lut) // 2  # the ``_kernel_lut`` row offset
     key = (f"{prefix} | shiftleft(CAST(_u_c AS BIGINT), {bv + 16}) "
            f"| shiftleft(CAST(_v_c AS BIGINT), 16) "
-           f"| shiftleft(CAST(_du + 128 AS BIGINT), 8) "
-           f"| CAST(_dv + 128 AS BIGINT)")
+           f"| shiftleft(CAST(_du + {r} AS BIGINT), 8) "
+           f"| CAST(_dv + {r} AS BIGINT)")
     # Fused sum-of-weights (wn_sql = weight·norm_u·norm_v, the codegen
     # LUT expression from grid_visibilities): summed map-side inside the
     # SAME groupBy that builds the fat rows, so the separate full-scan
@@ -681,12 +754,7 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
            .agg(F.expr("collect_list(struct(_k, _wr, _wi))").alias("_rows"),
                 F.expr("sum(_wn)").alias("_wn")))
 
-    # (256, support) LUT over the packed du byte; indices past the
-    # half-kernel table are unreachable for valid data — zero them
     ius = np.arange(-half, support - half)
-    didx = np.arange(256)
-    raw = np.abs(ov * ius[None, :] + (didx[:, None] - 128))
-    lut = np.where(raw < len(cgk), cgk[np.minimum(raw, len(cgk) - 1)], 0.0)
     off = (ius[:, None] * n_v + ius[None, :]).ravel().astype(np.int32)
     h = slab_w + 2 * half
     m = h * n_v
@@ -697,19 +765,9 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         pa.field("grid_im", pa.list_(pa.float64())),
         pa.field("sum_w_norm", pa.float64()),
     ])
-    chunk = 1024
+    scatter = _lut_scatter(support)
 
     def grid_arrow(batches):
-        # ONE complex128 add.at instead of two float64 ones: the re/im
-        # component adds land in the same order with the same operands
-        # (complex multiply by a real factor is componentwise), so the
-        # result is BIT-IDENTICAL to the split form, and the single
-        # indexed pass runs ~1.55x faster (175 vs 113 Mtaps/s
-        # single-thread) because the index decode + gather loop is paid
-        # once for both components.
-        cw_b = np.empty((chunk, support), np.complex128)
-        vz_b = np.empty((chunk, support, support), np.complex128)
-        idx_b = np.empty((chunk, support * support), np.int32)
         # one slab partial per group: the task holds every fat row of
         # its groups (one per input partition), summed in place
         acc: dict[int, np.ndarray] = {}
@@ -740,18 +798,8 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
                 fg = acc.get(g)
                 if fg is None:
                     fg = acc[g] = np.zeros(m, np.complex128)
-                cu = lut[duix]          # (n, support)
-                cv = lut[dvix]
-                for c0 in range(0, len(kseg), chunk):
-                    c1 = min(c0 + chunk, len(kseg))
-                    nc = c1 - c0
-                    cw = np.multiply(cu[c0:c1], w[c0:c1, None],
-                                     out=cw_b[:nc])
-                    vz = np.multiply(cw[:, :, None], cv[c0:c1, None, :],
-                                     out=vz_b[:nc])
-                    idx = np.add(base[c0:c1, None], off[None, :],
-                                 out=idx_b[:nc])
-                    np.add.at(fg, idx.reshape(-1), vz.reshape(-1))
+                # the packed offset bytes are du + r: LUT rows as is
+                scatter(fg, base, lut[duix], lut[dvix], w, off)
                 acc_wn[g] = acc_wn.get(g, 0.0) + (
                     b.column(3)[ri].as_py() or 0.0)
         if not acc:
@@ -784,158 +832,88 @@ def _dense_planes_arrow(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
     ]))
 
 
-def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
-                    *, chan: str, pol: str, precise: bool = False) -> DataFrame:
-    """Sparse-cell kernel gridder: a partial dense grid per input
-    partition via vectorized numpy scatter-add, its touched cells out,
-    final combine by groupBy sum — the reference's per-chunk grid +
-    tree-sum (SG:58-120) with Spark's partial/final aggregation as the
-    tree. (Dense-plane output is ``_dense_planes_arrow``.)
+def _kernel_cells(prepared: DataFrame, gp: GridParms, lut: np.ndarray,
+                  *, chan: str, pol: str, precise: bool = False) -> DataFrame:
+    """Sparse-cell kernel gridder: each input partition's rows scatter
+    one (chan, pol) plane at a time through ``_lut_scatter`` in a
+    ``mapInArrow`` pass (no shuffle before it), the plane's touched
+    cells go out, and the final ``groupBy`` sum combines partitions —
+    the reference's per-chunk grid + tree-sum (SG:58-120) with Spark's
+    partial/final aggregation as the tree.
 
-    ``precise`` quantizes each per-tap term with floor(x·1e9) and
-    accumulates BIGINT partial grids — integer addition is associative,
-    so the partition split cannot shift the result and the output is
-    bit-equal to the explode variant's precise path (same oracle twin).
-    A touch-count grid makes zero-sum touched cells emit rows exactly
-    like a groupBy over exploded taps would."""
+    chan and pol ride as their own columns in their own types (any
+    integer id round-trips); a null id raises. The touch mask emits a
+    cell whose taps cancel to 0.0, as the explode groupBy does.
+    ``precise`` sums int64 quanta of the explode/oracle association,
+    and integer addition is associative, so the partition split cannot
+    shift the result: the cells are bit-equal to the explode variant's
+    precise path (same oracle twin)."""
+    import pyarrow as pa
     import pyspark.sql.types as T
 
+    n_u, n_v, support = gp.n_u, gp.n_v, gp.support
+    m = n_u * n_v
+    if m >= 1 << 31:
+        raise ValueError(f"kernel gridder cells: a {n_u}x{n_v} plane "
+                         f"does not flat-index in int32")
+    r = len(lut) // 2  # the ``_kernel_lut`` row offset
+    taps = np.arange(-gp.half, support - gp.half)
+    off = (taps[:, None] * n_v + taps[None, :]).ravel().astype(np.int32)
+    src = prepared.select(chan, pol, "_u_c", "_v_c", "_du", "_dv",
+                          "_wd_re", "_wd_im")
     val_t = T.LongType() if precise else T.DoubleType()
     out_schema = T.StructType([
-        T.StructField(chan, T.IntegerType()),
-        T.StructField(pol, T.IntegerType()),
+        src.schema[chan], src.schema[pol],
         T.StructField("u_idx", T.IntegerType()),
         T.StructField("v_idx", T.IntegerType()),
         T.StructField("grid_re", val_t),
         T.StructField("grid_im", val_t),
     ])
-    n_u, n_v, ov, half, support = gp.n_u, gp.n_v, gp.oversampling, gp.half, gp.support
-    cgk_arr = cgk  # closure capture; broadcast with the task closure
-    cols = [chan, pol, "_u_c", "_v_c", "_du", "_dv", "_wd_re", "_wd_im"]
+    names = [chan, pol, "u_idx", "v_idx", "grid_re", "grid_im"]
+    scatter = _lut_scatter(support)
 
-    def _scatter(uu, vv, duu, dvv, wre, wim):
-        # per-tap 1-D loop: the u-axis kernel factor (and its product
-        # with the weighted data) is computed ONCE per iu and reused
-        # across the iv taps — half the gathers of the 2-D
-        # (rows x taps) form, and every temporary is a cache-resident
-        # 1-D array; scatter target is the (n_u, n_v) grid flattened
-        fre = np.zeros(n_u * n_v)
-        fim = np.zeros(n_u * n_v)
-        # touched-cell mask (sparse emission parity with the explode
-        # variant, which emits a 0.0 row for taps that exactly cancel);
-        # a plain boolean store per tap, far cheaper than a 3rd bincount
-        tou = np.zeros(n_u * n_v, bool)
-        idx_base = uu * n_v + vv
-        for iu in range(-half, support - half):
-            cu = cgk_arr[np.abs(ov * iu + duu)]
-            cur, cui = cu * wre, cu * wim
-            base_u = idx_base + iu * n_v
-            for iv in range(-half, support - half):
-                cv = cgk_arr[np.abs(ov * iv + dvv)]
-                idx = base_u + iv
-                fre += np.bincount(idx, cv * cur, minlength=n_u * n_v)
-                fim += np.bincount(idx, cv * cui, minlength=n_u * n_v)
-                tou[idx] = True
-        return fre, fim, tou
-
-    def grid_batches(batches):
-        if precise:
-            yield from _precise_batches(batches)
+    def cells_arrow(batches):
+        bs = [b for b in batches if b.num_rows]
+        if not bs:
             return
-        # production path: ONE pass over the whole partition. Arrow
-        # hands ~10k-row batches; concatenating first lets every
-        # bincount call scatter tens of millions of updates, so the
-        # O(grid) zeroing of the bincount result is amortized to noise
-        # (per-batch bincounts spend more time zeroing than adding).
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        key = (pdf[chan].to_numpy(np.int64) * 1_000_000
-               + pdf[pol].to_numpy(np.int64))
-        u_c = pdf["_u_c"].to_numpy(np.int64)
-        v_c = pdf["_v_c"].to_numpy(np.int64)
-        du = pdf["_du"].to_numpy(np.int64)
-        dv = pdf["_dv"].to_numpy(np.int64)
-        w_re = pdf["_wd_re"].to_numpy(np.float64)
-        w_im = pdf["_wd_im"].to_numpy(np.float64)
-        rows = []
-        for k in np.unique(key):
-            sel = key == k
-            # sort by cell: quasi-sequential scatter targets keep the
-            # bincount adds cache-resident (~1.5x)
-            order = np.argsort(u_c[sel] * n_v + v_c[sel], kind="stable")
-            uu, vv = u_c[sel][order], v_c[sel][order]
-            duu, dvv = du[sel][order], dv[sel][order]
-            wre, wim = w_re[sel][order], w_im[sel][order]
-            fre, fim, tou = _scatter(uu, vv, duu, dvv, wre, wim)
-            flat = np.nonzero(tou)[0]
-            ui, vi = flat // n_v, flat % n_v
-            rows.append(pd.DataFrame({
-                chan: np.full(len(ui), k // 1_000_000, np.int32),
-                pol: np.full(len(ui), k % 1_000_000, np.int32),
-                "u_idx": ui.astype(np.int32),
-                "v_idx": vi.astype(np.int32),
-                "grid_re": fre[flat],
-                "grid_im": fim[flat],
-            }))
-        if rows:
-            yield pd.concat(rows, ignore_index=True)
+        tab = pa.Table.from_batches(bs).combine_chunks()
+        if tab.column(0).null_count or tab.column(1).null_count:
+            raise ValueError(f"kernel gridder: null {chan} or {pol} id")
+        c, p, u_c, v_c, du, dv, wre, wim = (
+            col.to_numpy() for col in tab.columns)
+        order = np.lexsort((p, c))  # rows of one plane contiguous
+        c, p = c[order], p[order]
+        new = np.flatnonzero((c[1:] != c[:-1]) | (p[1:] != p[:-1])) + 1
+        fg = (np.zeros((2, m), np.int64) if precise
+              else np.zeros(m, np.complex128))
+        touch = np.zeros(m, bool)
+        for s0, s1 in zip([0, *new], [*new, len(c)]):
+            rows = order[s0:s1]
+            base = (u_c[rows] * n_v + v_c[rows]).astype(np.int32)
+            w = (np.stack((wre[rows], wim[rows])) if precise
+                 else wre[rows] + 1j * wim[rows])
+            scatter(fg, base, lut[du[rows] + r], lut[dv[rows] + r], w, off,
+                    touch)
+            flat = np.flatnonzero(touch)
+            vals = fg[..., flat]
+            if not precise:
+                vals = vals.real, vals.imag
+            ids = [pa.array(np.full(len(flat), x[s0]), t)
+                   for x, t in ((c, tab.schema[0].type),
+                                (p, tab.schema[1].type))]
+            yield pa.RecordBatch.from_arrays(
+                [*ids, pa.array((flat // n_v).astype(np.int32)),
+                 pa.array((flat % n_v).astype(np.int32)),
+                 pa.array(vals[0]), pa.array(vals[1])], names=names)
+            # clear only what this plane touched for the next one
+            fg[..., flat] = 0
+            touch[flat] = False
 
-    def _precise_batches(batches):
-        # gate path: quantized int64 partials, accumulated across
-        # batches, emitted once per partition
-        acc: dict[int, tuple] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            key = (pdf[chan].to_numpy(np.int64) * 1_000_000
-                   + pdf[pol].to_numpy(np.int64))
-            u_c = pdf["_u_c"].to_numpy(np.int64)
-            v_c = pdf["_v_c"].to_numpy(np.int64)
-            du = pdf["_du"].to_numpy(np.int64)
-            dv = pdf["_dv"].to_numpy(np.int64)
-            w_re = pdf["_wd_re"].to_numpy(np.float64)
-            w_im = pdf["_wd_im"].to_numpy(np.float64)
-            for k in np.unique(key):
-                sel = key == k
-                gre, gim, tou = acc.setdefault(int(k), (
-                    np.zeros((n_u, n_v), np.int64),
-                    np.zeros((n_u, n_v), np.int64),
-                    np.zeros((n_u, n_v), np.int64)))
-                uu, vv, duu, dvv = u_c[sel], v_c[sel], du[sel], dv[sel]
-                wre, wim = w_re[sel], w_im[sel]
-                for iu in range(-half, support - half):
-                    cu = cgk_arr[np.abs(ov * iu + duu)]
-                    for iv in range(-half, support - half):
-                        cv = cgk_arr[np.abs(ov * iv + dvv)]
-                        conv = cu * cv
-                        # same association as the explode/oracle
-                        # expression: floor((conv*wd)*1e9)
-                        np.add.at(gre, (uu + iu, vv + iv),
-                                  np.floor(conv * wre * 1.0e9).astype(np.int64))
-                        np.add.at(gim, (uu + iu, vv + iv),
-                                  np.floor(conv * wim * 1.0e9).astype(np.int64))
-                        np.add.at(tou, (uu + iu, vv + iv), 1)
-        rows = []
-        for k, (gre, gim, tou) in acc.items():
-            ui, vi = np.nonzero(tou)
-            rows.append(pd.DataFrame({
-                chan: np.full(len(ui), k // 1_000_000, np.int32),
-                pol: np.full(len(ui), k % 1_000_000, np.int32),
-                "u_idx": ui.astype(np.int32),
-                "v_idx": vi.astype(np.int32),
-                "grid_re": gre[ui, vi],
-                "grid_im": gim[ui, vi],
-            }))
-        if rows:
-            yield pd.concat(rows, ignore_index=True)
-
-    partials = prepared.select(*cols).mapInPandas(grid_batches, out_schema)
     fin = (lambda c: F.sum(c) / F.lit(1.0e9)) if precise else F.sum
-    return partials.groupBy(chan, pol, "u_idx", "v_idx").agg(
-        fin(F.col("grid_re")).alias("grid_re"),
-        fin(F.col("grid_im")).alias("grid_im"))
+    return (src.mapInArrow(cells_arrow, out_schema)
+            .groupBy(chan, pol, "u_idx", "v_idx")
+            .agg(fin(F.col("grid_re")).alias("grid_re"),
+                 fin(F.col("grid_im")).alias("grid_im")))
 
 
 # ---------------------------------------------------------------------------

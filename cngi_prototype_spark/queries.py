@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 
 from cngi_prototype_spark.functions import exact
 from cngi_prototype_spark.functions.exact import sql_dsum, sql_mean, sql_rms, sql_stddev, sql_wmean
+from cngi_prototype_spark.functions.lits import local_frame
 from cngi_prototype_spark.operators import averaging as OA
 from cngi_prototype_spark.operators import flags as OF
 from cngi_prototype_spark.operators.statistics import flag_summary, moments, statistics
@@ -4099,8 +4100,9 @@ def uv_degrid_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.col("row_id").alias("event_id"),
                       (F.round("model_re", 6) + F.lit(0.0)).alias("model_re"),
                       (F.round("model_im", 6) + F.lit(0.0)).alias("model_im"))
-    smodel = spark.createDataFrame(
-        _SPARSE_MODEL, "chan int, pol int, l_idx int, m_idx int, model double")
+    smodel = local_frame(
+        spark, _SPARSE_MODEL,
+        "chan int, pol int, l_idx int, m_idx int, model double")
     spred = predict_modelvis_image(smodel, fvis, _FGP, precise=_precise())
     sparse = spred.select(
         F.lit("sparse").alias("part"), F.col("row_id").alias("event_id"),
@@ -4138,9 +4140,9 @@ def uv_degrid_kernel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("predict_modelvis", None)  # forward FFT at production shape
 def predict_modelvis_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    model = spark.createDataFrame(
-        [(c, p, 32, 32, 2.0) for c in range(3) for p in range(2)],
-        ["chan", "pol", "l_idx", "m_idx", "model"])
+    model = local_frame(
+        spark, [(c, p, 32, 32, 2.0) for c in range(3) for p in range(2)],
+        "chan bigint, pol bigint, l_idx bigint, m_idx bigint, model double")
     vis = _uv_vis_keyed(spark, sf_dir).withColumnRenamed("event_id", "row_id")
     return predict_modelvis_image(model, vis, _GP)
 

@@ -21,7 +21,9 @@ Scale design (100 TB embeddings):
 
 from __future__ import annotations
 
+import functools
 import hashlib
+import operator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -606,7 +608,8 @@ def _lsh_tag(
     """Hyperplane-LSH signature tagging shared by
     :func:`cosine_pairs_lsh` and :func:`cosine_lsh_skipped_vectors`:
     returns ``(vid, uv, band, sig)`` — each vector unit-normalized and
-    replicated into ``num_bands`` (band, sig) buckets."""
+    replicated into ``num_bands`` (band, sig) buckets, ``sig`` the
+    bigint of the band's sign bits on either signature route."""
     import pandas as pd
 
     planes = [[_plane(seed, b * planes_per_band + p, dim)
@@ -616,16 +619,20 @@ def _lsh_tag(
                          _unit(_dvec(F.col(vec_col))).alias("uv"))
 
     def band_sig(b: int) -> Column:
+        # plane 0 is the most significant bit: the same bigint as the
+        # vectorized route's ``bits @ pow2``, so the route never
+        # changes the column's type or values
         bits = [
             F.when(
                 F.aggregate(
                     F.zip_with(F.col("uv"),
                                flit_arr(planes[b][p]),
                                lambda x, y: x * y),
-                    F.lit(0.0), lambda acc, x: acc + x) >= 0, "1").otherwise("0")
+                    F.lit(0.0), lambda acc, x: acc + x) >= 0,
+                F.lit(1 << (planes_per_band - 1 - p))).otherwise(F.lit(0))
             for p in range(planes_per_band)
         ]
-        return F.concat(*bits)
+        return functools.reduce(operator.add, bits).cast("long")
 
     # Two-tier signatures (the assign_cells pattern): the unrolled
     # zip_with folds bit-mirror the DuckDB twin but run interpreted —

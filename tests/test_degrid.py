@@ -164,6 +164,39 @@ def test_degrid_kernel_variant_matches_explode(spark, slab_w):
     assert m.sum() > 100 and (~m).sum() > 10  # both regimes exercised
 
 
+@pytest.mark.parametrize("ov", [256, 300])
+def test_degrid_kernel_matches_explode_past_255_oversampling(spark, ov):
+    """Fractional offsets reach ov//2 + 1: at oversampling 256 and 300
+    they pass +-128, and the kernel path still reads the right kernel
+    factors (the gridder's reachable-offset LUT)."""
+    gp = GridParms(n_u=32, n_v=32, cell_u=4.0e-5, cell_v=4.0e-5,
+                   support=7, oversampling=ov)
+    rng = np.random.default_rng(ov)
+    ui, vi = np.meshgrid(np.arange(32), np.arange(32), indexing="ij")
+    zeros = np.zeros(ui.size, np.int32)
+    gdf = spark.createDataFrame(pd.DataFrame({
+        "chan": zeros, "pol": zeros,
+        "u_idx": ui.ravel().astype(np.int32),
+        "v_idx": vi.ravel().astype(np.int32),
+        "grid_re": rng.normal(size=ui.size),
+        "grid_im": rng.normal(size=ui.size)}))
+    n = 300
+    vdf = spark.createDataFrame(pd.DataFrame({
+        "row_id": np.arange(n),
+        "u": rng.uniform(-2.5e3, 2.5e3, n),
+        "v": rng.uniform(-2.5e3, 2.5e3, n),
+        "freq": np.full(n, 1.0e9), "chan": zeros[:n], "pol": zeros[:n]}))
+    a = degrid_visibilities(vdf, gdf, gp, variant="explode").toPandas() \
+        .sort_values("row_id").reset_index(drop=True)
+    b = degrid_visibilities(vdf, gdf, gp, variant="kernel").toPandas() \
+        .sort_values("row_id").reset_index(drop=True)
+    assert len(a) == len(b) == n and a.model_re.notna().sum() > 200
+    assert (a.model_re.isna() == b.model_re.isna()).all()
+    m = a.model_re.notna()
+    assert np.allclose(a.model_re[m], b.model_re[m], rtol=0, atol=1e-9)
+    assert np.allclose(a.model_im[m], b.model_im[m], rtol=0, atol=1e-9)
+
+
 def test_degrid_kernel_hot_slab_valve_matches_explode(spark):
     """Centrally-condensed uv (every real array's regime) piles the
     rows into the central slabs; salt_probe must sub-bucket those

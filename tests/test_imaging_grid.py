@@ -354,3 +354,70 @@ def test_fused_sumw_with_psf_matches_standalone(spark, vis_pdf):
     for k in a:
         assert a[k][0] == pytest.approx(b[k][0], rel=1e-12)
         assert a[k][1] == pytest.approx(b[k][1], rel=1e-12)
+
+
+def _sorted_cells(df):
+    key = ["chan", "pol", "u_idx", "v_idx"]
+    return df.toPandas().sort_values(key).reset_index(drop=True)
+
+
+def test_kernel_cells_keep_any_integer_id(spark, vis_pdf):
+    """chan and pol travel as their own columns through the kernel
+    cells pass: negative, past-1e6 and past-int32 ids come back in
+    their own planes and types, exactly where the explode variant puts
+    them (a packed ``chan * 1e6 + pol`` key mapped (0, -1) to
+    (-1, 999999) and (2, 1000001) to (3, 1))."""
+    pdf = vis_pdf.assign(
+        chan=np.array([0, 2, 1 << 40])[vis_pdf["chan"]],
+        pol=np.array([-1, 1000001], np.int32)[vis_pdf["pol"]])
+    df = spark.createDataFrame(pdf).repartition(3)
+    k, _ = grid_visibilities(df, GP, variant="kernel")
+    e, _ = grid_visibilities(df, GP, variant="explode")
+    assert k.schema["chan"].dataType == e.schema["chan"].dataType
+    assert k.schema["pol"].dataType == e.schema["pol"].dataType
+    kp, ep = _sorted_cells(k), _sorted_cells(e)
+    assert set(zip(kp.chan, kp.pol)) == {
+        (c, p) for c in (0, 2, 1 << 40) for p in (-1, 1000001)}
+    key = ["chan", "pol", "u_idx", "v_idx"]
+    assert (kp[key].to_numpy() == ep[key].to_numpy()).all()
+    np.testing.assert_allclose(kp.grid_re, ep.grid_re, rtol=0, atol=1e-9)
+    np.testing.assert_allclose(kp.grid_im, ep.grid_im, rtol=0, atol=1e-9)
+
+
+def test_precise_kernel_cells_bit_equal_explode(spark, vis_pdf):
+    """Precise mode sums the explode/oracle int64 quanta, so the kernel
+    cells equal the explode cells bit for bit on a 5-partition input
+    spanning 3 chans x 2 pols."""
+    df = spark.createDataFrame(vis_pdf).repartition(5)
+    kp = _sorted_cells(grid_visibilities(df, GP, variant="kernel",
+                                         precise=True)[0])
+    ep = _sorted_cells(grid_visibilities(df, GP, variant="explode",
+                                         precise=True)[0])
+    assert len(set(zip(kp.chan, kp.pol))) == 6
+    assert kp.equals(ep)
+
+
+def test_kernel_cells_match_explode_past_255_oversampling(spark, vis_pdf):
+    """The cells pass reads the reachable-offset LUT, so an
+    oversampling past the packed planes' byte still grids right."""
+    gp = GridParms(n_u=48, n_v=40, cell_u=2.0e-5, cell_v=2.0e-5,
+                   support=7, oversampling=300)
+    df = spark.createDataFrame(vis_pdf).repartition(3)
+    kp = _sorted_cells(grid_visibilities(df, gp, variant="kernel")[0])
+    ep = _sorted_cells(grid_visibilities(df, gp, variant="explode")[0])
+    key = ["chan", "pol", "u_idx", "v_idx"]
+    assert len(kp) > 0 and (kp[key].to_numpy() == ep[key].to_numpy()).all()
+    np.testing.assert_allclose(kp.grid_re, ep.grid_re, rtol=0, atol=1e-9)
+    np.testing.assert_allclose(kp.grid_im, ep.grid_im, rtol=0, atol=1e-9)
+
+
+def test_kernel_cells_null_chan_raises(spark, vis_pdf):
+    from pyspark.errors import PySparkException
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(vis_pdf).withColumn(
+        "chan", F.when(F.col("chan") != 1, F.col("chan")))
+    grid, _ = grid_visibilities(df, GP, variant="kernel")
+    with pytest.raises(PySparkException,
+                       match="kernel gridder: null chan or pol id"):
+        grid.collect()

@@ -109,3 +109,19 @@ def test_sd_restore_fastresolve_rotate_tables_are_local(spark):
     _assert_local(fit_spectral_index(_cube(spark, "model"), FREQS))
     centers = {0: (0.5, -0.3), 1: (0.52, -0.28), 2: (0.48, -0.32)}
     _assert_local(direction_rotate(_vis(spark), centers, (0.51, -0.29)))
+
+
+def test_query_model_tables_are_local(spark):
+    """The model images queries.py builds from Python lists:
+    uv_degrid's sparse CLEAN model and predict_modelvis's point
+    sources (the queries read parquet, so the model is the
+    LocalRelation with image-index columns)."""
+    import cngi_prototype_spark.queries as Q
+    from tests.test_plan_shapes import SF
+
+    for name in ("uv_degrid", "predict_modelvis"):
+        df = Q.queries()[name](spark, SF)
+        _assert_local(df)
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert any("LocalRelation" in line and "l_idx" in line
+                   for line in plan.splitlines()), plan

@@ -571,6 +571,29 @@ def test_lsh_max_bucket_caps_degenerate_cluster(spark):
     assert (skipped.bucket_n == 1000).all()
 
 
+def test_lsh_skipped_vectors_same_on_both_signature_routes(spark):
+    """The signature route follows a size estimate, so it must not
+    change what cosine_lsh_skipped_vectors returns: the fold and the
+    vectorized route both emit ``sig`` as the bigint of the band's
+    bits, with equal rows."""
+    from cngi_prototype_spark.similarity.ann import (
+        cosine_lsh_skipped_vectors)
+    rng = np.random.default_rng(5)
+    hot = rng.normal(size=64)
+    rows = [(i, (hot + 1e-6 * rng.normal(size=64)).tolist())
+            for i in range(30)]
+    rows += [(100 + j, rng.normal(size=64).tolist()) for j in range(40)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    kw = dict(dim=64, num_bands=4, planes_per_band=6, max_bucket=5,
+              n_rows=len(rows))
+    fold = cosine_lsh_skipped_vectors(df, vectorize_above=10 ** 9, **kw)
+    vec = cosine_lsh_skipped_vectors(df, vectorize_above=0, **kw)
+    assert fold.schema.simpleString() == vec.schema.simpleString()
+    assert dict(fold.dtypes)["sig"] == "bigint"
+    a, b = sorted(fold.collect()), sorted(vec.collect())
+    assert a == b and len(a) >= 30 * 4
+
+
 def test_tier_routing_n_rows_hint_skips_upstream_eval(spark):
     """With n_rows passed, tier routing must not run ANY job: building
     the plan over a poisoned upstream (raises on execution) succeeds;
